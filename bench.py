@@ -35,7 +35,7 @@ def main() -> None:
     sf = float(m.group(1)) if m else -1.0
 
     from cyber_etl_spark.plans import QUERIES
-    from cyber_etl_spark.session import SessionMemo, get_spark
+    from cyber_etl_spark.session import BUILD_COUNT, BUILD_LOG, get_spark
 
     # retainedJobs sized far above any per-pass job count (worst query
     # ~70 jobs): getJobIdsForGroup only sees jobs the status store
@@ -131,13 +131,14 @@ def main() -> None:
         # is untouched.
         "jobs": jobs,
         # Shared-artifact build costs (r12 verdict item #2): each
-        # SessionMemo build is timed once at its first (and only)
-        # construction — the cold-pass cost the min-of-2 warm `queries`
-        # numbers amortize away.  A full cold run costs
-        # sum(queries) + sum(builds).
-        "builds": {
-            k: SessionMemo.BUILD_LOG[k] for k in sorted(SessionMemo.BUILD_LOG)
-        },
+        # artifact() build is timed, keyed `<sf basename>:<name>[:params]`
+        # — the cold-pass cost the min-of-2 warm `queries` numbers
+        # amortize away.  A full cold run costs sum(queries) + sum(builds).
+        "builds": dict(sorted(BUILD_LOG.items())),
+        # parallel map (same keys as `builds`): how many times each
+        # artifact was built — 2+ means it was evicted and rebuilt, and
+        # `builds` holds only the latest build's seconds.
+        "build_counts": dict(sorted(BUILD_COUNT.items())),
         "sf": sf,
         # Tail-duplicated summary scalars (r11 verdict item #5): the
         # driver's BENCH_r*.json keeps only the LAST ~2000 chars of this

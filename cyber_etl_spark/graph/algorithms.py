@@ -22,6 +22,9 @@ list and the rank/label state by vertex id so each superstep co-locates,
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import threading
 import weakref
 from contextlib import contextmanager
 
@@ -46,6 +49,12 @@ _DERIVED: "weakref.WeakKeyDictionary[DataFrame, dict]" = weakref.WeakKeyDictiona
 # OOMs real executors long before the driver notices.
 _BCAST_MAX_ROWS = 1_000_000
 
+# AQE is session-wide: the first _aqe_off entrant saves and disables it,
+# the last to leave restores it.
+_AQE_LOCK = threading.Lock()
+_aqe_depth = 0
+_aqe_saved: "str | None" = None
+
 
 @contextmanager
 def _aqe_off(spark, enabled: bool = True):
@@ -64,20 +73,28 @@ def _aqe_off(spark, enabled: bool = True):
     (past `_BCAST_MAX_ROWS` — the 100 TB regime — AQE stays on for
     skew handling).  The toggle is scoped to the loop's own blocking
     actions; frames returned to callers plan under the session default
-    again.  AQE is adaptive EXECUTION, never results — a concurrently
-    planned query on a threaded sweep would at worst run one query
-    non-adaptively.
+    again.  AQE is adaptive EXECUTION, never results — a query planned
+    concurrently on a threaded sweep at worst runs non-adaptively while
+    some loop is inside this block; overlapping blocks share one saved
+    value, so the last to leave restores the session default.
     """
+    global _aqe_depth, _aqe_saved
     if not enabled:
         yield
         return
     key = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
+    with _AQE_LOCK:
+        if _aqe_depth == 0:
+            _aqe_saved = spark.conf.get(key)
+            spark.conf.set(key, "false")
+        _aqe_depth += 1
     try:
         yield
     finally:
-        spark.conf.set(key, old)
+        with _AQE_LOCK:
+            _aqe_depth -= 1
+            if _aqe_depth == 0:
+                spark.conf.set(key, _aqe_saved)
 
 
 def _width(rows: int, rows_per_part: int = 200_000) -> int:
@@ -133,6 +150,7 @@ def _compact(df: DataFrame, rows_hint: int, rows_per_part: int = 200_000) -> Dat
 
 
 _BARRIER_DIRS: dict[str, str] = {}
+_BARRIER_LOCK = threading.Lock()
 
 
 def _plan_barrier(df: DataFrame) -> DataFrame:
@@ -163,10 +181,12 @@ def _plan_barrier(df: DataFrame) -> DataFrame:
     import uuid
 
     spark = df.sparkSession
-    base = _BARRIER_DIRS.setdefault(
-        spark.sparkContext.applicationId,
-        tempfile.mkdtemp(prefix="cyber_etl_barrier_"),
-    )
+    app = spark.sparkContext.applicationId
+    with _BARRIER_LOCK:
+        base = _BARRIER_DIRS.get(app)
+        if base is None:
+            base = _BARRIER_DIRS[app] = tempfile.mkdtemp(prefix="cyber_etl_barrier_")
+            atexit.register(shutil.rmtree, base, ignore_errors=True)
     path = os.path.join(base, uuid.uuid4().hex[:12])
     df.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)

@@ -21,12 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import SessionMemo, session_token
+from ..session import artifact
 from ..sources import read_table
 from .registry import query
 from .textops import _SHINGLES_CTE, cached_ivf_index, cached_shingles
-
-_EPS_PAIR_CACHE: dict[tuple, DataFrame] = SessionMemo()
 
 
 def cached_eps_pairs(
@@ -37,20 +35,15 @@ def cached_eps_pairs(
     kernel (operators/ann.eps_neighbor_pairs) and pinned — the shared
     neighbor-graph input of the density family (DBSCAN q194, label
     spreading q235).  Same persisted-projection policy as the co-supply
-    _EDGE_CACHE: the eps-graph is a graph BUILD, not part of any one
+    edges: the eps-graph is a graph BUILD, not part of any one
     consumer's marginal cost."""
-    key = (session_token(spark), sf_dir, "eps_pairs", threshold)
-    if key not in _EPS_PAIR_CACHE:
-        from ..operators.ann import eps_neighbor_pairs
+    from ..operators.ann import eps_neighbor_pairs
 
+    def build():
         emb = read_table(spark, sf_dir, "embeddings")
-        _EPS_PAIR_CACHE[key] = eps_neighbor_pairs(
-            emb, threshold=threshold
-        ).localCheckpoint(eager=True)
-    return _EPS_PAIR_CACHE[key]
+        return eps_neighbor_pairs(emb, threshold=threshold).localCheckpoint(eager=True)
 
-
-_BASKET_CACHE: dict[tuple, DataFrame] = SessionMemo()
+    return artifact(spark, sf_dir, "eps_pairs", build, threshold)
 
 
 def cached_order_items(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -58,21 +51,18 @@ def cached_order_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONCE per (session, dataset) — the shared base relation of the
     basket-mining family (q192 pair rules, q314 itemCF, q342 triples,
     q322's train/holdout derivation).  Same persisted-projection policy
-    as the co-supply _EDGE_CACHE / the Lloyd-training _SH_CACHE (r12
-    opt #24): the 600 k-row distinct is the basket-table BUILD every
-    family member re-ran identically, not part of any one consumer's
-    marginal cost."""
-    key = (session_token(spark), sf_dir, "order_items")
-    if key not in _BASKET_CACHE:
-        _BASKET_CACHE[key] = (
+    as the co-supply edges / the Lloyd training (r12 opt #24): the
+    600 k-row distinct is the basket-table BUILD every family member
+    re-ran identically, not part of any one consumer's marginal cost."""
+    return artifact(
+        spark, sf_dir, "order_items",
+        lambda: (
             read_table(spark, sf_dir, "lineitem")
-            .select(
-                F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-            )
+            .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
             .distinct()
             .localCheckpoint(eager=True)
-        )
-    return _BASKET_CACHE[key]
+        ),
+    )
 
 
 def cached_order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,15 +71,15 @@ def cached_order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     The sorted array is what the basket-local posexplode+slice pair/
     triple enumeration (r12 opt #17/#19/#30) walks; q192/q314/q342 each
     paid the identical groupBy(ok) exchange before sharing it here."""
-    key = (session_token(spark), sf_dir, "order_baskets")
-    if key not in _BASKET_CACHE:
-        _BASKET_CACHE[key] = (
+    return artifact(
+        spark, sf_dir, "order_baskets",
+        lambda: (
             cached_order_items(spark, sf_dir)
             .groupBy("ok")
             .agg(F.array_sort(F.collect_list("pk")).alias("ps"))
             .localCheckpoint(eager=True)
-        )
-    return _BASKET_CACHE[key]
+        ),
+    )
 
 
 @query(
@@ -400,16 +390,10 @@ def q185_ra_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     libm differences across engines cannot be hash-gated.
 
     Grid budget: sum of 1e12 div deg weights <= 1e12*|common neighbors| - fits int64 below ~9e6 common neighbors per pair; ANSI raises loudly beyond."""
-    from .graphops import _BACKBONE_CACHE, _sparse_upper_edges
-    from ..session import session_token
+    from .graphops import _sparse_sym_edges, _sparse_upper_edges
 
     se = _sparse_upper_edges(spark, sf_dir)
-    symkey = (session_token(spark), sf_dir, "sym")
-    if symkey not in _BACKBONE_CACHE:
-        _BACKBONE_CACHE[symkey] = se.unionByName(
-            se.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).localCheckpoint(eager=True)
-    sym = _BACKBONE_CACHE[symkey]
+    sym = _sparse_sym_edges(spark, sf_dir)
     degs = sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("n"))
     x, y = sym.alias("x"), sym.alias("y")
     dz = degs.alias("dz")

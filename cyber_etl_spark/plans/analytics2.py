@@ -28,12 +28,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import SessionMemo, session_token
+from ..session import artifact
 from ..sources import read_table
 from ..operators.quantiles import _local_values_df as _values_df
 from .registry import query
-
-_DAY_GRID_CACHE: dict[tuple, DataFrame] = SessionMemo()
 
 
 def _ha6(num: str, den: str) -> F.Column:
@@ -86,15 +84,15 @@ def _day_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     (event_type, day, cnt), pinned — shared by the trend/change-point
     family (q216 / q228 / q229), whose consumers would otherwise each
     re-scan events and re-pin the same ~calendar x 5 rows."""
-    key = (session_token(spark), sf_dir, "day_grid")
-    if key not in _DAY_GRID_CACHE:
-        ev = read_table(spark, sf_dir, "events")
-        _DAY_GRID_CACHE[key] = (
-            ev.groupBy("event_type", F.to_date("ts").alias("day"))
+    return artifact(
+        spark, sf_dir, "day_grid",
+        lambda: (
+            read_table(spark, sf_dir, "events")
+            .groupBy("event_type", F.to_date("ts").alias("day"))
             .agg(F.count(F.lit(1)).alias("cnt"))
             .localCheckpoint(eager=True)
-        )
-    return _DAY_GRID_CACHE[key]
+        ),
+    )
 
 
 @query(
@@ -2253,18 +2251,16 @@ def q235_label_spreading(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_JOURNEY_CACHE: dict[tuple, tuple] = SessionMemo()
-
-
 def _journey_prob(spark: SparkSession, sf_dir: str):
     """Memoized (journey table, transition-probability table) of the
     first-order purchase-truncated Markov chain — q236's corpus-scale
     work, shared with the expected-absorption-time query (q262): one
     high-cardinality user window pass + terminal union per (session,
     dataset), both frames pinned."""
-    key = (session_token(spark), sf_dir, "journey")
-    if key in _JOURNEY_CACHE:
-        return _JOURNEY_CACHE[key]
+    return artifact(spark, sf_dir, "journey", lambda: _build_journey_prob(spark, sf_dir))
+
+
+def _build_journey_prob(spark: SparkSession, sf_dir: str):
     ev = read_table(spark, sf_dir, "events")
     wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # pinned: fp and j both consume the row-numbered table — unpinned,
@@ -2315,7 +2311,6 @@ def _journey_prob(spark: SparkSession, sf_dir: str):
         )
         .localCheckpoint(eager=True)
     )
-    _JOURNEY_CACHE[key] = (j, prob)
     return j, prob
 
 

@@ -14,13 +14,11 @@ from pyspark.sql import functions as F
 
 from ..graph.algorithms import connected_components, label_propagation, pagerank
 from ..graph.builder import co_supply_edges
-from ..session import SessionMemo, session_token
+from ..session import artifact
 from ..sources import read_table
 from ..operators.quantiles import _local_values_df as _values_df
 from .registry import query
 from .textops import _JACCARD_FROM_COMMON, _SHINGLES_CTE
-
-_LPA_CACHE: dict[tuple, DataFrame] = SessionMemo()
 
 
 def _cached_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -31,14 +29,10 @@ def _cached_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     the canonical persisted artifact of a community run (the reference
     WRITES it back to Neo4j: gds.louvain.write); recomputing it per
     query was pure waste."""
-    key = (session_token(spark), sf_dir, "lpa4")
-    if key not in _LPA_CACHE:
-        edges = co_supply_edges(spark, sf_dir)
-        _LPA_CACHE[key] = label_propagation(edges, iterations=4)
-    return _LPA_CACHE[key]
-
-
-_LOUVAIN1_CACHE: dict[tuple, DataFrame] = SessionMemo()
+    return artifact(
+        spark, sf_dir, "lpa4",
+        lambda: label_propagation(co_supply_edges(spark, sf_dir), iterations=4),
+    )
 
 
 def _cached_louvain1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,12 +41,10 @@ def _cached_louvain1(spark: SparkSession, sf_dir: str) -> DataFrame:
     them — level 1 dominates the hierarchy's cost."""
     from ..graph.algorithms import louvain_level
 
-    key = (session_token(spark), sf_dir, "louvain3")
-    if key not in _LOUVAIN1_CACHE:
-        _LOUVAIN1_CACHE[key] = louvain_level(
-            co_supply_edges(spark, sf_dir), rounds=3
-        )
-    return _LOUVAIN1_CACHE[key]
+    return artifact(
+        spark, sf_dir, "louvain3",
+        lambda: louvain_level(co_supply_edges(spark, sf_dir), rounds=3),
+    )
 
 
 _EDGES_CTE = """
@@ -632,9 +624,6 @@ se AS (SELECT src, dst FROM ew, qq WHERE w >= q99)
 """
 
 
-_BACKBONE_CACHE: dict[tuple, DataFrame] = SessionMemo()
-
-
 def _sparse_upper_edges_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P95-weight backbone WITH the co-supply weight kept — the frame
     q404's spanning forest orders by; :func:`_sparse_upper_edges` is a
@@ -642,23 +631,19 @@ def _sparse_upper_edges_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     run once per (session, dataset) regardless of which form consumers
     ask for."""
     from ..graph.builder import co_supply_edges_weighted
-
-    key = (session_token(spark), sf_dir, "w")
-    if key in _BACKBONE_CACHE:
-        return _BACKBONE_CACHE[key]
-    w = co_supply_edges_weighted(spark, sf_dir).where(F.col("src") < F.col("dst"))
     from ..operators.quantiles import exact_quantiles
 
-    q99 = exact_quantiles(w, "weight", {"q99": 0.95})
-    # weight column name in builder output is 'weight'
-    se = (
-        w.crossJoin(F.broadcast(q99))
-        .where(F.col("weight") >= F.col("q99"))
-        .select("src", "dst", "weight")
-        .localCheckpoint(eager=True)
-    )
-    _BACKBONE_CACHE[key] = se
-    return se
+    def build():
+        w = co_supply_edges_weighted(spark, sf_dir).where(F.col("src") < F.col("dst"))
+        q99 = exact_quantiles(w, "weight", {"q99": 0.95})
+        return (
+            w.crossJoin(F.broadcast(q99))
+            .where(F.col("weight") >= F.col("q99"))
+            .select("src", "dst", "weight")
+            .localCheckpoint(eager=True)
+        )
+
+    return artifact(spark, sf_dir, "w", build)
 
 
 def _sparse_upper_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -668,12 +653,23 @@ def _sparse_upper_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the filter threshold.  Materialized once per (session, dataset);
     q89/q90/q100 all reuse the same frame (and therefore the same
     memoized _sym/LPA state keyed on its identity)."""
-    key = (session_token(spark), sf_dir)
-    if key in _BACKBONE_CACHE:
-        return _BACKBONE_CACHE[key]
-    se = _sparse_upper_edges_w(spark, sf_dir).select("src", "dst")
-    _BACKBONE_CACHE[key] = se
-    return se
+    return artifact(
+        spark, sf_dir, "se",
+        lambda: _sparse_upper_edges_w(spark, sf_dir).select("src", "dst"),
+    )
+
+
+def _sparse_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Both directions of :func:`_sparse_upper_edges`, pinned once per
+    (session, dataset) — the neighborhood form q90 and q185 join on."""
+
+    def build():
+        se = _sparse_upper_edges(spark, sf_dir)
+        return se.unionByName(
+            se.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).localCheckpoint(eager=True)
+
+    return artifact(spark, sf_dir, "sym", build)
 
 
 @query(
@@ -735,16 +731,7 @@ def q90_node_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index economics as document Jaccard (q21): candidates come
     from an equi-join on the shared neighbor, never an all-pairs
     product."""
-    se = _sparse_upper_edges(spark, sf_dir)
-    symkey = (session_token(spark), sf_dir, "sym")
-    if symkey not in _BACKBONE_CACHE:
-        _BACKBONE_CACHE[symkey] = (
-            se.unionByName(
-                se.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .localCheckpoint(eager=True)
-        )
-    sym = _BACKBONE_CACHE[symkey]
+    sym = _sparse_sym_edges(spark, sf_dir)
     degs = sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("n"))
     # shared-neighbor "basket" form (the q322/q342 r12 treatment): each
     # dst's sorted neighbor list enumerates exactly the id_a < id_b
@@ -823,29 +810,17 @@ def q100_community_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sparse_sym_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric (both directions) P95 backbone WITH integer weights —
-    the substrate for weighted traversals (SSSP).  Same quantile filter
-    as :func:`_sparse_upper_edges` (the tiny agg runs once more; the
-    expensive weighted edge build underneath is memoized in the graph
-    builder), cached per (session, dataset)."""
-    from ..graph.builder import co_supply_edges_weighted
+    the substrate for weighted traversals (SSSP): the pinned
+    :func:`_sparse_upper_edges_w` and its mirror, cached per (session,
+    dataset)."""
 
-    key = (session_token(spark), sf_dir, "symw")
-    if key in _BACKBONE_CACHE:
-        return _BACKBONE_CACHE[key]
-    w = co_supply_edges_weighted(spark, sf_dir).where(F.col("src") < F.col("dst"))
-    from ..operators.quantiles import exact_quantiles
+    def build():
+        w = _sparse_upper_edges_w(spark, sf_dir)
+        return w.unionByName(
+            w.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
+        ).localCheckpoint(eager=True)
 
-    q99 = exact_quantiles(w, "weight", {"q99": 0.95})
-    upper = (
-        w.crossJoin(F.broadcast(q99))
-        .where(F.col("weight") >= F.col("q99"))
-        .select("src", "dst", "weight")
-    )
-    sym = upper.unionByName(
-        upper.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
-    ).localCheckpoint(eager=True)
-    _BACKBONE_CACHE[key] = sym
-    return sym
+    return artifact(spark, sf_dir, "symw", build)
 
 
 _SYM_SE_CTE = """,
@@ -1043,25 +1018,23 @@ h{i} AS (
     )
 
 
-_PURCHASE_CACHE: dict[tuple, DataFrame] = SessionMemo()
-
-
 def _purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed supplier→customer purchase graph, built once per
     (session, dataset) — the same persisted-projection policy as
-    co_supply_edges' _EDGE_CACHE: the 600 k-row join+distinct is the
-    graph BUILD, not part of any algorithm's marginal cost."""
-    key = (session_token(spark), sf_dir, "purchase")
-    if key not in _PURCHASE_CACHE:
+    co_supply_edges: the 600 k-row join+distinct is the graph BUILD, not
+    part of any algorithm's marginal cost."""
+
+    def build():
         li = read_table(spark, sf_dir, "lineitem")
         orders = read_table(spark, sf_dir, "orders")
-        _PURCHASE_CACHE[key] = (
+        return (
             li.join(orders, li.l_orderkey == orders.o_orderkey)
             .select(F.col("l_suppkey").alias("src"), F.col("o_custkey").alias("dst"))
             .distinct()
             .localCheckpoint(eager=True)
         )
-    return _PURCHASE_CACHE[key]
+
+    return artifact(spark, sf_dir, "purchase", build)
 
 
 @query("q141_hits", oracle=_hits_oracle(5), tags=("graph", "hits", "directed"))
@@ -2096,19 +2069,17 @@ def _msf_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     q405 cuts it; one Borůvka run per (session, dataset)."""
     from ..operators.mst import boruvka_msf
 
-    key = (session_token(spark), sf_dir, "msf")
-    if key in _BACKBONE_CACHE:
-        return _BACKBONE_CACHE[key]
-    se = _sparse_upper_edges_w(spark, sf_dir)
-    edges = se.select("src", "dst", (-F.col("weight")).alias("d"))
-    msf = (
-        boruvka_msf(edges, tail_cap=128)
-        .join(se, ["src", "dst"])
-        .select("src", "dst", F.col("weight").cast("long").alias("w"))
-        .localCheckpoint(eager=True)
-    )
-    _BACKBONE_CACHE[key] = msf
-    return msf
+    def build():
+        se = _sparse_upper_edges_w(spark, sf_dir)
+        edges = se.select("src", "dst", (-F.col("weight")).alias("d"))
+        return (
+            boruvka_msf(edges, tail_cap=128)
+            .join(se, ["src", "dst"])
+            .select("src", "dst", F.col("weight").cast("long").alias("w"))
+            .localCheckpoint(eager=True)
+        )
+
+    return artifact(spark, sf_dir, "msf", build)
 
 
 @query(

@@ -22,24 +22,22 @@ from ..operators.dedup import (
     minhash_lsh_pairs_incremental,
     simhash_neardup_pairs,
 )
-from ..session import SessionMemo, session_token
+from ..session import artifact
 from ..sources import read_table
 from .registry import query
 
 _STOPS_SQL = "[" + ", ".join(f"'{w}'" for w in EN_STOPWORDS) + "]"
 
-# one materialized shingle table per (session, dataset): shared by the
-# Jaccard, MinHash-LSH and clustering queries
-_SH_CACHE: dict[tuple, object] = SessionMemo()
-
 
 def cached_shingles(spark: SparkSession, sf_dir: str):
+    """One materialized shingle table per (session, dataset): shared by
+    the Jaccard, MinHash-LSH and clustering queries."""
     from ..operators.dedup import shingle_sets
 
-    key = (session_token(spark), sf_dir)
-    if key not in _SH_CACHE:
-        _SH_CACHE[key] = shingle_sets(read_table(spark, sf_dir, "documents"))
-    return _SH_CACHE[key]
+    return artifact(
+        spark, sf_dir, "shingles",
+        lambda: shingle_sets(read_table(spark, sf_dir, "documents")),
+    )
 
 
 def cached_kmeans(
@@ -53,14 +51,15 @@ def cached_kmeans(
     q375 catalog-routing rule applied to clustering artifacts)."""
     from ..operators.ann import _kmeans_core, _quantized_vecs
 
-    key = (session_token(spark), sf_dir, "kmeans", n_cells, iters)
-    if key not in _SH_CACHE:
+
+    def build():
         emb = read_table(spark, sf_dir, "embeddings")
         vecs = _quantized_vecs(emb, "vec_id", "embedding").localCheckpoint(
             eager=True
         )
-        _SH_CACHE[key] = (vecs, _kmeans_core(vecs, n_cells, iters))
-    return _SH_CACHE[key]
+        return vecs, _kmeans_core(vecs, n_cells, iters)
+
+    return artifact(spark, sf_dir, "kmeans", build, n_cells, iters)
 
 
 def cached_ivf_index(
@@ -72,14 +71,15 @@ def cached_ivf_index(
     ``ivf_assign(emb, n_cells)`` (same kmeans_fit path)."""
     from ..operators.ann import nearest_centroid_assign
 
-    key = (session_token(spark), sf_dir, "ivfidx", n_cells, iters)
-    if key not in _SH_CACHE:
+
+    def build():
         vecs, cents = cached_kmeans(spark, sf_dir, n_cells, iters)
         assign = nearest_centroid_assign(vecs, cents).localCheckpoint(
             eager=True
         )
-        _SH_CACHE[key] = (cents, assign)
-    return _SH_CACHE[key]
+        return cents, assign
+
+    return artifact(spark, sf_dir, "ivfidx", build, n_cells, iters)
 
 
 def cached_lsh_pairs(spark: SparkSession, sf_dir: str):
@@ -89,16 +89,16 @@ def cached_lsh_pairs(spark: SparkSession, sf_dir: str):
     independent of which OTHER documents exist, the LSH pairs of any
     document SUBSET are exactly this table restricted to ids in the
     subset; q109 exploits that instead of re-running the banding."""
-    key = (session_token(spark), sf_dir, "lsh05")
-    if key not in _SH_CACHE:
-        _SH_CACHE[key] = minhash_lsh_pairs(
+    return artifact(
+        spark, sf_dir, "lsh05",
+        lambda: minhash_lsh_pairs(
             read_table(spark, sf_dir, "documents"),
             threshold=0.5,
             num_perm=8,
             bands=4,
             shingles_df=cached_shingles(spark, sf_dir),
-        ).localCheckpoint(eager=True)
-    return _SH_CACHE[key]
+        ).localCheckpoint(eager=True),
+    )
 
 
 def cached_jaccard_pairs(spark: SparkSession, sf_dir: str):
@@ -107,14 +107,14 @@ def cached_jaccard_pairs(spark: SparkSession, sf_dir: str):
     The pair table is the natural shared intermediate of a dedup pass
     (production pipelines persist it); the pinned copy is tiny (only
     pairs above threshold survive)."""
-    key = (session_token(spark), sf_dir, "pairs05")
-    if key not in _SH_CACHE:
-        _SH_CACHE[key] = jaccard_pairs(
+    return artifact(
+        spark, sf_dir, "pairs05",
+        lambda: jaccard_pairs(
             read_table(spark, sf_dir, "documents"),
             threshold=0.5,
             shingles_df=cached_shingles(spark, sf_dir),
-        ).localCheckpoint(eager=True)
-    return _SH_CACHE[key]
+        ).localCheckpoint(eager=True),
+    )
 
 def _md5_fraction(col: str):
     """Uniform [0,1) fraction from the md5 of a stable id — the single
@@ -1767,9 +1767,6 @@ from ..operators.bpe import (  # noqa: E402
     merges_from_bests,
 )
 
-_BPE_CACHE: dict[tuple, tuple] = SessionMemo()
-
-
 def _bpe_rounds(spark: SparkSession, sf_dir: str, num_merges: int = 4) -> tuple:
     """One cached BPE merge-rounds run per (session, dataset): the learn
     (q131), curve (q136) and tokenize (q145) queries all consume the
@@ -1777,12 +1774,13 @@ def _bpe_rounds(spark: SparkSession, sf_dir: str, num_merges: int = 4) -> tuple:
     artifact, not a per-query recomputation."""
     from ..operators.bpe import _merge_rounds, _word_table
 
-    key = (session_token(spark), sf_dir, num_merges)
-    if key not in _BPE_CACHE:
+
+    def build():
         docs = read_table(spark, sf_dir, "documents")
         words = _word_table(docs, "text", keep_token=True).localCheckpoint(eager=True)
-        _BPE_CACHE[key] = _merge_rounds(words, num_merges, keep_last_words=True)
-    return _BPE_CACHE[key]
+        return _merge_rounds(words, num_merges, keep_last_words=True)
+
+    return artifact(spark, sf_dir, "bpe", build, num_merges)
 
 
 @query(
@@ -1964,20 +1962,17 @@ def q136_bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-_POS_CACHE: dict[tuple, tuple] = SessionMemo()
-
-
 def _positional_shingles(spark: SparkSession, sf_dir: str, n: int = 8):
     """Shared artifact of the span family (q139/q152 detect / q140 cut):
     the positional n-gram table (doc_id, n_tokens, pos, shingle) and its
     per-shingle (owner, df) aggregate, each checkpointed once per
     (session, dataset, n) — the same persisted-projection policy as the
-    _SH_CACHE shingle sets.  ``n`` is the span granularity knob (r5
+    shingle sets.  ``n`` is the span granularity knob (r5
     verdict item 7): smaller n = finer, more aggressive span detection."""
     from ..functions.text import shingles as _sh
 
-    key = (session_token(spark), sf_dir, "pos", n)
-    if key not in _POS_CACHE:
+
+    def build():
         docs = read_table(spark, sf_dir, "documents")
         toks = F.filter(F.split("text", " "), lambda x: x != "")
         pos = docs.select(
@@ -1990,8 +1985,9 @@ def _positional_shingles(spark: SparkSession, sf_dir: str, n: int = 8):
         own = pos.groupBy("shingle").agg(
             F.min("doc_id").alias("owner"), F.countDistinct("doc_id").alias("df")
         ).localCheckpoint(eager=True)
-        _POS_CACHE[key] = (pos, own)
-    return _POS_CACHE[key]
+        return pos, own
+
+    return artifact(spark, sf_dir, "pos", build, n)
 
 
 def repeated_spans(

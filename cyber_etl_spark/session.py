@@ -76,85 +76,70 @@ def session_token(spark: SparkSession) -> str:
     return spark.sparkContext.applicationId
 
 
+# Datasets (``sf_dir``s) whose artifacts the store holds at once.  A
+# registry pass builds ~40 artifacts per dataset, so the bound counts
+# datasets, not entries: an entry cap would evict and rebuild mid-pass.
+_MAX_DATASETS = 4
+
+
 class SessionMemo(dict):
-    """Bounded memo dict for per-(session, dataset) build artifacts.
+    """The artifact store: ``(session_token, sf_dir, name, *params)`` →
+    artifact, written only through :func:`artifact`.
 
-    Every memoization cache in the package (edge builds, shingle tables,
-    backbones, BPE merge rounds, positional shingles) keys entries as
-    ``(session_token(spark), sf_dir, ...)``.  A plain module-level dict
-    never evicts: entries of a *stopped* session pin dead DataFrame
-    plans (and their localCheckpoint RDD handles) forever, and a
-    long-lived service cycling many datasets grows without bound — the
-    r5 verdict's hygiene finding.
-
-    Eviction happens on write, where the current session is known:
+    A plain dict never evicts: entries of a *stopped* session pin dead
+    DataFrame plans (and their localCheckpoint RDD handles) forever, and
+    a long-lived service cycling many datasets grows without bound.
+    Eviction therefore happens on write, where the current session is
+    known:
 
     - **dead-session purge**: PySpark allows one live SparkContext per
-      process, so any existing entry whose leading token differs from
-      the key being inserted belongs to a stopped session — dropped.
-    - **size cap** (default 16 entries): oldest-inserted entries are
-      dropped first, bounding the artifacts kept across many datasets
-      within one session.
-
-    Reads stay plain dict hits — no per-access overhead in the hot
-    bench loop.
-
-    **Build-cost visibility** (r12 verdict item #2): every memo call
-    site uses the ``if key not in cache: cache[key] = build()`` idiom,
-    so the wall time between a miss (``__contains__`` returning False)
-    and the subsequent insert IS the build cost.  Both ends are
-    recorded into the class-level ``BUILD_LOG`` (label → seconds,
-    label = the key tuple minus session token and dataset dir), which
-    bench.py publishes as a ``builds`` map next to ``queries`` — the
-    amortized shared-artifact costs the min-of-2 warm methodology
-    otherwise erases.  Lazy builds (plan-only, pinned by the first
-    consumer) record their construction time only, by design.
+      process, so any entry whose token differs from the key being
+      inserted belongs to a stopped session — dropped.
+    - **dataset bound**: inserting a key for a dataset beyond the
+      ``_MAX_DATASETS`` held drops the oldest dataset's artifacts whole.
     """
 
-    BUILD_LOG: "dict[str, float]" = {}
-    _MISS_AT: "dict[tuple, float]" = {}
-    _LOG_LOCK = _threading.Lock()
-
-    def __init__(self, cap: int = 16) -> None:
-        super().__init__()
-        self._cap = cap
-
-    def __contains__(self, key) -> bool:  # type: ignore[override]
-        hit = super().__contains__(key)
-        if not hit and isinstance(key, tuple) and key:
-            with SessionMemo._LOG_LOCK:
-                SessionMemo._MISS_AT[(id(self), key)] = _time.perf_counter()
-        return hit
-
     def __setitem__(self, key, value) -> None:
-        # keys MUST be (session_token, ...) tuples: a non-tuple key would
-        # make the dead-session purge compare k[0] against a character
-        # (review r6 finding) — fail loudly instead of mis-evicting
-        if not (isinstance(key, tuple) and key):
-            raise TypeError(f"SessionMemo keys must be non-empty tuples, got {key!r}")
-        tok = key[0]
-        for stale in [k for k in self if k[0] != tok]:
-            super().__delitem__(stale)
-        # cap only gates NET growth: overwriting an existing key must not
-        # evict an unrelated live entry (review r6 finding)
-        if not super().__contains__(key):
-            while len(self) >= self._cap:
-                super().__delitem__(next(iter(self)))
+        tok, ds = key[0], key[1]
+        stale = [k for k in self if k[0] != tok]
+        held = list(dict.fromkeys(k[1] for k in self if k[0] == tok))
+        if ds not in held and len(held) >= _MAX_DATASETS:
+            stale += [k for k in self if k[0] == tok and k[1] == held[0]]
+        for k in stale:
+            super().__delitem__(k)
         super().__setitem__(key, value)
-        with SessionMemo._LOG_LOCK:
-            t0 = SessionMemo._MISS_AT.pop((id(self), key), None)
-        if t0 is not None:
-            label = ":".join(str(x) for x in key[2:]) or "artifact"
-            SessionMemo.BUILD_LOG[label] = round(_time.perf_counter() - t0, 4)
 
-    # dict.update()/setdefault() are C-level and would bypass __setitem__
-    # (entries inserted that way would evade both the purge and the cap) —
-    # route them through the guarded path
-    def update(self, *a, **kw) -> None:  # type: ignore[override]
-        for k, v in dict(*a, **kw).items():
-            self[k] = v
 
-    def setdefault(self, key, default=None):  # type: ignore[override]
-        if key not in self:
-            self[key] = default
-        return self[key]
+_ARTIFACTS = SessionMemo()
+# Guards store lookups and inserts (with their purges) only — never a
+# build, because builds nest (symw -> w -> weighted edges).
+_ARTIFACTS_LOCK = _threading.Lock()
+# label -> seconds of the latest build, and label -> number of builds
+# (a rebuild after eviction shows as a count of 2); bench.py publishes both.
+BUILD_LOG: "dict[str, float]" = {}
+BUILD_COUNT: "dict[str, int]" = {}
+
+
+def artifact(spark: SparkSession, sf_dir: str, name: str, build, *params):
+    """The shared artifact ``name`` (with ``params``) of dataset
+    ``sf_dir`` in this session: ``build()`` runs on the first request,
+    every later one returns the same object until it is evicted.
+
+    The build runs outside the store lock and is timed into ``BUILD_LOG``
+    under ``basename(sf_dir):name[:params]``.  A build that raises
+    stores and logs nothing."""
+    key = (session_token(spark), sf_dir, name, *params)
+    with _ARTIFACTS_LOCK:
+        if key in _ARTIFACTS:
+            return _ARTIFACTS[key]
+    t0 = _time.perf_counter()
+    value = build()
+    secs = round(_time.perf_counter() - t0, 4)
+    label = ":".join(
+        [os.path.basename(os.path.normpath(sf_dir)), name, *map(str, params)]
+    )
+    with _ARTIFACTS_LOCK:
+        _ARTIFACTS[key] = value
+        BUILD_LOG[label] = secs
+        BUILD_COUNT[label] = BUILD_COUNT.get(label, 0) + 1
+    return value

@@ -43,9 +43,8 @@ def bucketed_join(
 
 # ---- ensure-build lifecycle for the q400 bucketed fact pair -------------
 
-from ..session import SessionMemo  # noqa: E402
+from ..session import artifact  # noqa: E402
 
-_PAIR_MEMO: dict[tuple, tuple] = SessionMemo()
 _PAIR_LOCK = threading.Lock()
 
 
@@ -75,7 +74,7 @@ def ensure_bucketed_fact_pair(
 
     Lifecycle mirrors ``operators/statcat.ensure_catalog``: table names
     embed a (path, size, mtime) dataset digest so a regenerated dataset
-    mints fresh tables; a module lock + per-(session, digest) memo makes
+    mints fresh tables; a module lock + per-(session, digest) artifact makes
     the threaded verification sweep race-safe (saveAsTable overwrite is
     NOT atomic, so the build itself must be serialized — the q380/q381
     race class).  Returns the two table names.
@@ -91,36 +90,33 @@ def ensure_bucketed_fact_pair(
     digest = _dataset_digest(sf_dir, ("lineitem", "orders"))
     li_tbl = f"bkt_li_{digest}_{n_buckets}"
     ord_tbl = f"bkt_ord_{digest}_{n_buckets}"
-    tok = spark.sparkContext.applicationId
-    key = (tok, digest, n_buckets)
-    if _PAIR_MEMO.get(key):
-        return li_tbl, ord_tbl
-    with _PAIR_LOCK:
-        if _PAIR_MEMO.get(key):
-            return li_tbl, ord_tbl
-        if not (
-            spark.catalog.tableExists(li_tbl) and spark.catalog.tableExists(ord_tbl)
-        ):
-            # a PREVIOUS process (in-memory catalog, so table registrations
-            # die with the session) may have left the managed locations
-            # behind — saveAsTable refuses to reuse them
-            # (LOCATION_ALREADY_EXISTS).  The tables are derived artifacts
-            # of this function alone, so clearing an orphaned location and
-            # rebuilding is always safe.
-            import shutil
 
-            wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-            wh_local = wh.removeprefix("file:")
-            for t in (li_tbl, ord_tbl):
-                if not spark.catalog.tableExists(t):
-                    shutil.rmtree(os.path.join(wh_local, t), ignore_errors=True)
-            li = read_table(spark, sf_dir, "lineitem").selectExpr(
-                "l_orderkey AS ok", "l_extendedprice", "l_discount", "l_returnflag"
-            )
-            orders = read_table(spark, sf_dir, "orders").selectExpr(
-                "o_orderkey AS ok", "o_orderpriority"
-            )
-            write_bucketed(li, li_tbl, "ok", n_buckets)
-            write_bucketed(orders, ord_tbl, "ok", n_buckets)
-        _PAIR_MEMO[key] = (li_tbl, ord_tbl)
-    return li_tbl, ord_tbl
+    def build():
+        with _PAIR_LOCK:
+            if not (
+                spark.catalog.tableExists(li_tbl) and spark.catalog.tableExists(ord_tbl)
+            ):
+                # a PREVIOUS process (in-memory catalog, so table registrations
+                # die with the session) may have left the managed locations
+                # behind — saveAsTable refuses to reuse them
+                # (LOCATION_ALREADY_EXISTS).  The tables are derived artifacts
+                # of this function alone, so clearing an orphaned location and
+                # rebuilding is always safe.
+                import shutil
+
+                wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+                wh_local = wh.removeprefix("file:")
+                for t in (li_tbl, ord_tbl):
+                    if not spark.catalog.tableExists(t):
+                        shutil.rmtree(os.path.join(wh_local, t), ignore_errors=True)
+                li = read_table(spark, sf_dir, "lineitem").selectExpr(
+                    "l_orderkey AS ok", "l_extendedprice", "l_discount", "l_returnflag"
+                )
+                orders = read_table(spark, sf_dir, "orders").selectExpr(
+                    "o_orderkey AS ok", "o_orderpriority"
+                )
+                write_bucketed(li, li_tbl, "ok", n_buckets)
+                write_bucketed(orders, ord_tbl, "ok", n_buckets)
+        return li_tbl, ord_tbl
+
+    return artifact(spark, sf_dir, "bucketed_pair", build, digest, n_buckets)
