@@ -64,13 +64,13 @@ def _aqe_off(spark, enabled: bool = True):
     hinted broadcast join + one aggregation whose width `_nw` already
     sizes — AQE contributes nothing there but materializes every
     exchange as an extra scheduler job (r13 A/B, interleaved min-of-3:
-    q28 3.17→2.88 s / 33→22 jobs, q135 3.06→2.36, q29 2.59→2.31,
-    q129 2.77→2.33; jobs −1/superstep each).  Loops with UNHINTED or
-    self-join shuffles (CC, ktruss, luby, betweenness) measured WORSE
-    wall with AQE off — AQE's parallel stage materialization overlaps
-    their independent subtrees — so only the single-shuffle-per-step
-    rank/relaxation loops use this, and only on their broadcast path
-    (past `_BCAST_MAX_ROWS` — the 100 TB regime — AQE stays on for
+    q28 3.17→2.88 s / 33→22 jobs, q135 3.06→2.36, q29 2.59→2.31; jobs
+    −1/superstep each).  Loops with UNHINTED or self-join shuffles (CC,
+    ktruss, luby, betweenness) measured WORSE wall with AQE off — AQE's
+    parallel stage materialization overlaps their independent subtrees —
+    so only the single-shuffle-per-step rank/frontier loops with a
+    blocking action per superstep use this, and only on their broadcast
+    path (past `_BCAST_MAX_ROWS` — the 100 TB regime — AQE stays on for
     skew handling).  The toggle is scoped to the loop's own blocking
     actions; frames returned to callers plan under the session default
     again.  AQE is adaptive EXECUTION, never results — a query planned
@@ -231,6 +231,19 @@ def _ecount(edges: DataFrame, e: DataFrame) -> int:
     return _derived(edges, ("symcount",), lambda: e.count())
 
 
+def _vertices(edges: DataFrame) -> tuple[DataFrame, int]:
+    """(id) vertex frame of the symmetrized list and its row count,
+    pinned once per edge frame (lazy pin + count: one job) — the loops'
+    initial state and their up-front broadcast bound."""
+
+    def build():
+        v = _sym(edges).select(F.col("src").alias("id")).distinct()
+        v = v.localCheckpoint(eager=False)
+        return v, v.count()
+
+    return _derived(edges, ("vertices",), build)
+
+
 def connected_components(
     edges: DataFrame, max_iterations: int = 40, barrier_every: int = 6
 ) -> DataFrame:
@@ -248,11 +261,8 @@ def connected_components(
     high-diameter forest; see the barrier docstring).
     """
     e = _sym(edges)
-    labels = (
-        e.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-    )
+    vertices, n_nodes = _vertices(edges)
+    labels = vertices.withColumn("component", F.col("id"))
     # Convergence detection: labels are monotone non-increasing (least of
     # self and neighbor minima), so Σcomponent strictly decreases iff any
     # vertex changed.  Comparing sums costs one tiny aggregate over the
@@ -269,7 +279,6 @@ def connected_components(
     # bypass AQE's broadcast conversion.  Past the cap the shuffle plan
     # is unchanged.  Labels are integers with min tie-breaks, so join
     # strategy cannot perturb the result.
-    n_nodes = _derived(edges, ("nnodes",), lambda: e.select("src").distinct().count())
     bx = (
         (lambda d: F.broadcast(d))
         if n_nodes <= _BCAST_MAX_ROWS
@@ -486,10 +495,9 @@ def label_propagation(
     hard part 3: assert structure, not GDS's internal tie-breaking).
     """
     e = _sym(edges)
-    labels = e.select(F.col("src").alias("id")).distinct().withColumn(
-        "community", F.col("id")
-    )
-    bcast = labels.count() <= _BCAST_MAX_ROWS  # label vector small → map-side join
+    vertices, n = _vertices(edges)
+    labels = vertices.withColumn("community", F.col("id"))
+    bcast = n <= _BCAST_MAX_ROWS  # label vector small → map-side join
     w = _width(_ecount(edges, e))
     for i in range(iterations):
         # ONE exchange replaces the former count-then-argmax pair:
@@ -741,11 +749,7 @@ def louvain(
         # under contraction), so the memoized node count of the ORIGINAL
         # graph is a valid one-sided broadcast bound — the former
         # per-level count() job existed only for this decision
-        n = _derived(
-            edges,
-            ("nnodes-sym",),
-            lambda: _sym(edges).select("src").distinct().count(),
-        )
+        n = _vertices(edges)[1]
         bsrc = F.broadcast(lab_src) if n <= _BCAST_MAX_ROWS else lab_src
         bdst = F.broadcast(lab_dst) if n <= _BCAST_MAX_ROWS else lab_dst
         # the contraction/remap tables are community-count-sized — run
@@ -807,7 +811,7 @@ def bfs_distances(
     # the settled set is ≤ |V| BY CONSTRUCTION (one row per reached
     # vertex), so one memoized node bound decides broadcastability for
     # the whole loop (the CC policy)
-    n_nodes = _derived(edges, ("nnodes",), lambda: e.select("src").distinct().count())
+    n_nodes = _vertices(edges)[1]
     bcast = n_nodes <= _BCAST_MAX_ROWS
     # under the cap every join is hinted-broadcast and the one distinct
     # exchange is _nw-sized — the AQE-off loop class (see _aqe_off)
@@ -881,12 +885,7 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 4) -> DataFrame:
     never re-shuffles.
     """
     e = _sym(edges)
-    # lazy pin + count: the count materializes the checkpoint — one job,
-    # not two (the bfs_distances r12 pattern)
-    active = (
-        e.select(F.col("src").alias("id")).distinct().localCheckpoint(eager=False)
-    )
-    n = active.count()
+    active, n = _vertices(edges)  # round 0: every vertex
     w = _width(_ecount(edges, e))
 
     def in_core_deg(act: DataFrame, act_rows: int) -> DataFrame:
@@ -945,7 +944,7 @@ def ktruss(edges_upper: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
     w = _width(m)
     thr = k - 2
     # the survivor edge set only SHRINKS, so the initial edge count is a
-    # one-sided bound for every round's join sides (the q129/CC policy):
+    # one-sided bound for every round's join sides (the CC policy):
     # under the cap the triangle self-joins and the survivor⋈support
     # join are hinted-broadcast (the stats-less pinned frames otherwise
     # plan SortMergeJoins that re-exchange both sides every round), and
@@ -1021,7 +1020,7 @@ def multi_bfs_distances(
     # (the betweenness policy) decides the anti-join's broadcast for the
     # whole loop; the expansion join stays frontier-keyed (its key is
     # bare `id`, a different broadcast mode, so nothing would be reused)
-    n_nodes = _derived(edges, ("nnodes",), lambda: e.select("src").distinct().count())
+    n_nodes = _vertices(edges)[1]
     bcast_state = n_frontier * n_nodes <= _BCAST_MAX_ROWS
     # under the state bound both joins are hinted-broadcast and the one
     # distinct exchange is _nw-sized — the AQE-off loop class
@@ -1057,46 +1056,46 @@ def sssp_hop_limited(
     """Cheapest-path-within-``iterations``-hops from ``source`` →
     (id, dist): Bellman-Ford relaxation over a weighted symmetric edge
     list (src, dst, weight), integer weights so min-distances are exact
-    and engine-portable (no float accumulation order anywhere).
+    and engine-portable (no float accumulation order anywhere).  An
+    empty edge list gives no rows; a source without edges gets only
+    itself at 0.
 
-    The distance vector starts as one row and grows to ≤|V|; it is
-    pinned per superstep (the force-broadcast loop discipline) and
-    broadcast while under ``_BCAST_MAX_ROWS``, falling back to a shuffle
-    join that AQE can re-convert.  The edge list is referenced every
-    superstep — callers pass an already-materialized frame (the builders
-    checkpoint theirs).
+    The supersteps unroll into ONE lazy plan that reads each distance
+    vector once: a zero-weight self-loop per vertex brings its own
+    distance back through the relaxation join, and the source's 0 is
+    re-offered as a one-row constant.  The edge side (edges + self-loops)
+    is pinned once per edge frame; under ``_BCAST_MAX_ROWS`` one broadcast
+    of it serves every superstep, past it the edge exchange is reused and
+    the vector leaves each aggregation hash-partitioned by ``id``.
     """
     spark = wedges.sparkSession
-    e = wedges.select("src", "dst", F.col("weight").cast("long").alias("w"))
-    dist = _local_values_df(
-        spark, [[int(source), 0]], "id bigint, dist bigint"
-    ).localCheckpoint(eager=True)
-    w = _width(_ecount(wedges, e))
-    # dist is <= |V| rows BY CONSTRUCTION (one row per reached vertex),
-    # so ONE up-front memoized node bound decides broadcastability for
-    # every superstep — the former per-iteration dist.count() existed
-    # only for this decision and cost one extra job per superstep
-    # (min-distances are exact integers, so join strategy cannot perturb
-    # the result; past the cap the shuffle plan is unchanged).
-    n_nodes = _derived(
-        wedges, ("nnodes",), lambda: e.select("src").distinct().count()
-    )
-    bcast = n_nodes <= _BCAST_MAX_ROWS
-    # single hinted-broadcast join + one agg per relaxation: the AQE-off
-    # loop class (see _aqe_off; q129 A/B 2.77→2.33 s, 22→15 jobs)
-    with _aqe_off(e.sparkSession, bcast):
-      for _ in range(iterations):
-        d = F.broadcast(dist) if bcast else dist
-        relax = e.join(d, e.src == d["id"]).select(
-            F.col("dst").alias("id"), (d["dist"] + F.col("w")).alias("dist")
+
+    def build():
+        e = wedges.select("src", "dst", F.col("weight").cast("long").alias("w"))
+        v = e.select("src").union(e.select("dst")).distinct()
+        loops = v.select("src", F.col("src").alias("dst"), F.lit(0).cast("long").alias("w"))
+        ex = e.unionByName(loops).localCheckpoint(eager=False)
+        rows = ex.count()  # the action that materializes the pin
+        return _compact(ex, rows), rows
+
+    ex, rows = _derived(wedges, ("sssp_edges",), build)
+    if rows == 0:
+        return _local_values_df(spark, [], "id bigint, dist bigint")
+    seed = _local_values_df(spark, [[int(source), 0]], "id bigint, dist bigint")
+    bcast = rows <= _BCAST_MAX_ROWS
+    side = F.broadcast(ex) if bcast else ex
+    dist = seed
+    for _ in range(iterations):
+        step = (
+            dist.join(side, F.col("id") == F.col("src"))
+            .select(F.col("dst").alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
+            .unionByName(seed)
+            .groupBy("id")
+            .agg(F.min("dist").alias("dist"))
         )
-        dist = (
-            _nw(
-                dist.unionByName(relax).groupBy("id").agg(F.min("dist").alias("dist")),
-                w,
-            )
-            .localCheckpoint(eager=True)
-        )
+        # past the cap the id-partitioned aggregate feeds the next join
+        # exchange-free, so only the broadcast path is _nw-collapsed
+        dist = _nw(step, _width(rows)) if bcast else step
     return dist
 
 
@@ -1215,7 +1214,7 @@ def betweenness_sampled(
     # jobs bypass AQE's broadcast conversion).  Past the cap the shuffle
     # plan is unchanged.  sigma is integral (join strategy can't perturb
     # it); delta keeps the per-level round(…, 6) convention.
-    n_nodes = _derived(edges, ("nnodes",), lambda: e.select("src").distinct().count())
+    n_nodes = _vertices(edges)[1]
     small = len(sources) * n_nodes <= _BCAST_MAX_ROWS
     bx = (lambda d: F.broadcast(d)) if small else (lambda d: d)
     # NOT a VALUES relation: r13 re-tested the r12 hypothesis that the
@@ -1436,7 +1435,7 @@ def luby_mis(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
     ).localCheckpoint(eager=False)
     und_nodes, und_edges = _split(state)
     # one up-front bound decides broadcastability for the whole loop (the
-    # q129/CC policy): every per-round side table (blocked ≤ |E|, winners
+    # CC policy): every per-round side table (blocked ≤ |E|, winners
     # ≤ |V|, excluded ≤ 2|E|, rm ≤ |V|+2|E|) only shrinks with the
     # undecided subgraph.  With the pre-join distincts dropped under the
     # cap, `rm` can carry up to |V|+2|E| UNDEDUPED rows ≈ 2·n0, so the

@@ -651,8 +651,7 @@ def _sparse_upper_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard sparsification before cubic-ish analytics (triangles,
     node similarity): the quantile is one tiny aggregate, broadcast back
     as the filter threshold.  Materialized once per (session, dataset);
-    q89/q90/q100 all reuse the same frame (and therefore the same
-    memoized _sym/LPA state keyed on its identity)."""
+    q89/q157 and :func:`_sparse_sym_edges` all reuse the same frame."""
     return artifact(
         spark, sf_dir, "se",
         lambda: _sparse_upper_edges_w(spark, sf_dir).select("src", "dst"),
@@ -661,13 +660,19 @@ def _sparse_upper_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sparse_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both directions of :func:`_sparse_upper_edges`, pinned once per
-    (session, dataset) — the neighborhood form q90 and q185 join on."""
+    (session, dataset) — the neighborhood form q90 and q185 join on and
+    the undirected edge list q100, q128 and q162 iterate over.  A
+    duplicate-free i<j list plus its mirror is symmetric and
+    duplicate-free, so the frame is marked ``_cyber_symmetric`` and the
+    graph loops' memoized derivations key on this one object."""
 
     def build():
         se = _sparse_upper_edges(spark, sf_dir)
-        return se.unionByName(
+        sym = se.unionByName(
             se.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         ).localCheckpoint(eager=True)
+        sym._cyber_symmetric = True
+        return sym
 
     return artifact(spark, sf_dir, "sym", build)
 
@@ -787,13 +792,7 @@ def q100_community_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     The community table is |V| rows → broadcast onto the fact scan;
     revenue accumulates in exact decimal straight from lineitem so no
     per-supplier double rounding compounds."""
-    from pyspark.sql import functions as F
-
-    se = _sparse_upper_edges(spark, sf_dir)
-    edges = se.unionByName(
-        se.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    comm = label_propagation(edges, iterations=4)
+    comm = label_propagation(_sparse_sym_edges(spark, sf_dir), iterations=4)
     li = read_table(spark, sf_dir, "lineitem")
     return (
         li.join(F.broadcast(comm), li.l_suppkey == comm.id)
@@ -808,17 +807,22 @@ def q100_community_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sparse_sym_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _sparse_sym_weighted(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, int | None]:
     """Symmetric (both directions) P95 backbone WITH integer weights —
     the substrate for weighted traversals (SSSP): the pinned
-    :func:`_sparse_upper_edges_w` and its mirror, cached per (session,
+    :func:`_sparse_upper_edges_w` and its mirror, with the backbone's
+    lowest vertex id (None when it is empty), cached per (session,
     dataset)."""
 
     def build():
         w = _sparse_upper_edges_w(spark, sf_dir)
-        return w.unionByName(
+        symw = w.unionByName(
             w.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
         ).localCheckpoint(eager=True)
+        # i<j orientation: the lowest vertex id is the lowest src
+        return symw, w.agg(F.min("src")).collect()[0][0]
 
     return artifact(spark, sf_dir, "symw", build)
 
@@ -863,11 +867,7 @@ def q128_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     GDS; here a shrink-only semi-join loop over a pinned edge list."""
     from ..graph.algorithms import kcore
 
-    se = _sparse_upper_edges(spark, sf_dir)
-    edges = se.unionByName(
-        se.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    out = kcore(edges, k=3, rounds=4)
+    out = kcore(_sparse_sym_edges(spark, sf_dir), k=3, rounds=4)
     return out.select(F.col("id").alias("suppkey"), "core_deg")
 
 
@@ -960,8 +960,7 @@ def q129_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches the unrolled-relaxation oracle by construction."""
     from ..graph.algorithms import sssp_hop_limited
 
-    symw = _sparse_sym_weighted(spark, sf_dir)
-    src = symw.agg(F.min("src").alias("s")).collect()[0]["s"]
+    symw, src = _sparse_sym_weighted(spark, sf_dir)
     if src is None:
         return symw.select(
             F.col("src").alias("suppkey"), F.lit(0).cast("bigint").alias("dist")
@@ -1211,10 +1210,7 @@ def q162_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source, vertex)-keyed loop."""
     from ..graph.algorithms import betweenness_sampled
 
-    se = _sparse_upper_edges(spark, sf_dir)
-    sym = se.unionByName(
-        se.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = _sparse_sym_edges(spark, sf_dir)
     sources = [
         r["src"]
         for r in sym.select("src").distinct().orderBy("src").limit(4).collect()

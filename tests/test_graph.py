@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -234,6 +235,65 @@ def test_sssp_prefers_cheap_multi_hop(spark):
     assert d == {0: 0, 2: 1, 1: 3, 3: 4}  # 0-2-1 (3) beats 0-1 (10)
     d1 = {r.id: r.dist for r in sssp_hop_limited(edges, 0, iterations=1).collect()}
     assert d1 == {0: 0, 1: 10, 2: 1}  # one relaxation: direct edges only
+
+
+def test_sssp_source_without_edges(spark):
+    """A source outside a non-empty graph is reached at distance 0 and
+    nothing else; an empty edge list is an empty graph and gives no
+    rows, with the (id bigint, dist bigint) schema."""
+    from cyber_etl_spark.graph.algorithms import sssp_hop_limited
+
+    edges = spark.createDataFrame(
+        [(0, 1, 5), (1, 0, 5)], "src long, dst long, weight long"
+    )
+    assert [tuple(r) for r in sssp_hop_limited(edges, 99, iterations=3).collect()] == [
+        (99, 0)
+    ]
+    empty = spark.createDataFrame([], "src long, dst long, weight long")
+    out = sssp_hop_limited(empty, 0, iterations=3)
+    assert out.count() == 0
+    assert out.schema.simpleString() == "struct<id:bigint,dist:bigint>"
+
+
+def test_sssp_submits_no_job_per_superstep(spark):
+    """Once the edge side is derived, a call builds one lazy plan: the
+    call itself submits as many jobs for 6 supersteps as for 2 (none),
+    and both plans give the unrolled relaxation's distances."""
+    from cyber_etl_spark.graph.algorithms import sssp_hop_limited
+
+    rows = [(0, 1, 10), (0, 2, 1), (2, 1, 2), (1, 3, 1), (3, 4, 7)]
+    edges = spark.createDataFrame(
+        rows + [(b, a, w) for a, b, w in rows], "src long, dst long, weight long"
+    )
+    sssp_hop_limited(edges, 0, iterations=1).collect()  # derives the edge side
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs, dists = {}, {}
+    for it in (2, 6):
+        group = f"sssp-supersteps-{it}"
+        sc.setJobGroup(group, group)
+        try:
+            out = sssp_hop_limited(edges, 0, iterations=it)
+            jobs[it] = len(tracker.getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        dists[it] = {r.id: r.dist for r in out.collect()}
+    assert jobs[2] == jobs[6]
+    assert dists[2] == {0: 0, 1: 3, 2: 1, 3: 11}
+    assert dists[6] == {0: 0, 1: 3, 2: 1, 3: 4, 4: 11}
+
+
+@pytest.mark.parametrize("name", ["q128_kcore", "q129_sssp"])
+def test_kcore_sssp_past_cap_match_oracle(spark, sf_correct, monkeypatch, name):
+    """Past ``_BCAST_MAX_ROWS`` k-core semi-joins the active set without
+    a broadcast hint and SSSP joins its distance vector to the exchanged
+    edge side: both plans must still match the DuckDB oracle."""
+    from cyber_etl_spark.graph import algorithms
+    from cyber_etl_spark.testing import compare_query
+
+    monkeypatch.setattr(algorithms, "_BCAST_MAX_ROWS", 0)
+    res = compare_query(spark, sf_correct, name)
+    assert res.ok, f"{name}: {res.detail}"
 
 
 def test_ktruss_edge_peel_semantics(spark):
