@@ -130,6 +130,38 @@ def _derived(edges: DataFrame, tag: tuple, build) -> DataFrame:
     return slot[tag]
 
 
+def _one_task(edges: DataFrame, schema: str, kernel) -> DataFrame:
+    """Run ``kernel(pdf) -> pdf`` once over the whole of ``edges`` in ONE
+    ``mapInPandas`` task over the coalesced frame — the local path of a
+    loop whose edge list is at or under ``_BCAST_MAX_ROWS``.
+
+    Under the cap every superstep would broadcast the whole edge list to
+    every task anyway; one task holding it runs the loop without a
+    scheduled stage, an AQE re-plan or a pin per superstep (the textrank
+    rule: bounded iteration state must not loop as distributed
+    supersteps).  No input yields a typed empty frame; input above the
+    cap is refused rather than risking a single-task OOM.
+    """
+    import pandas as pd
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    cap = _BCAST_MAX_ROWS
+    empty = to_arrow_schema(StructType.fromDDL(schema)).empty_table().to_pandas()
+
+    def run(batches):
+        chunks = [b for b in batches if len(b)]
+        rows = sum(len(b) for b in chunks)
+        if rows > cap:
+            raise ValueError(
+                f"{rows} edge rows exceed the one-task cap ({cap}); "
+                "past it the loop must run distributed"
+            )
+        yield kernel(pd.concat(chunks, ignore_index=True)) if chunks else empty
+
+    return edges.coalesce(1).mapInPandas(run, schema)
+
+
 def _compact(df: DataFrame, rows_hint: int, rows_per_part: int = 200_000) -> DataFrame:
     """Right-size partitions before materializing loop state.
 
@@ -877,22 +909,54 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 4) -> DataFrame:
     is below ``k``; after ``rounds`` rounds (or earlier fixpoint — the
     peel is monotone, so stopping at a stable round equals running all
     of them) the survivors and their in-core degrees are returned.
+    Vertices left without an in-core edge are absent.
 
-    Scale shape: one round = two semi-joins of the (pinned) edge list
-    against the active set + a src-keyed count — the active set only
-    shrinks, is broadcast while under ``_BCAST_MAX_ROWS``, and is
-    checkpointed per round per the loop-state discipline.  The edge side
-    never re-shuffles.
+    At or under ``_BCAST_MAX_ROWS`` edges the whole peel runs in one task
+    (:func:`_one_task`): ``np.unique`` indexes the vertices and one
+    ``np.bincount`` per round gives the in-core degrees — integer counts,
+    exact by construction.  Past the cap one round = two semi-joins of
+    the (pinned) edge list against the active set + a src-keyed count;
+    the active set only shrinks and is checkpointed per round per the
+    loop-state discipline, and the edge side never re-shuffles.
     """
     e = _sym(edges)
-    active, n = _vertices(edges)  # round 0: every vertex
-    w = _width(_ecount(edges, e))
+    m = _ecount(edges, e)
+    if m <= _BCAST_MAX_ROWS:
 
-    def in_core_deg(act: DataFrame, act_rows: int) -> DataFrame:
-        a = F.broadcast(act) if act_rows <= _BCAST_MAX_ROWS else act
+        def peel(pdf):
+            import numpy as np
+            import pandas as pd
+
+            s, d = pdf["src"].to_numpy("int64"), pdf["dst"].to_numpy("int64")
+            ids, inv = np.unique(np.concatenate([s, d]), return_inverse=True)
+            s, d = inv[: len(s)], inv[len(s) :]
+            act = np.zeros(len(ids), bool)
+            act[s] = True  # round 0: every vertex
+
+            def in_core_deg(a):
+                live = a[s] & a[d]
+                return np.bincount(s[live], minlength=len(ids))
+
+            for _ in range(rounds):
+                deg = in_core_deg(act)
+                nxt = (deg > 0) & (deg >= k)
+                stable = nxt.sum() == act.sum()  # fixpoint — further rounds are no-ops
+                act = nxt
+                if stable or not act.any():
+                    break
+            deg = in_core_deg(act)
+            keep = deg > 0
+            return pd.DataFrame({"id": ids[keep], "core_deg": deg[keep]})
+
+        return _one_task(e, "id bigint, core_deg bigint", peel)
+
+    active, n = _vertices(edges)  # round 0: every vertex
+    w = _width(m)
+
+    def in_core_deg(act: DataFrame) -> DataFrame:
         return _nw(
-            e.join(a.select(F.col("id").alias("src")), "src", "left_semi")
-            .join(a.select(F.col("id").alias("dst")), "dst", "left_semi")
+            e.join(act.select(F.col("id").alias("src")), "src", "left_semi")
+            .join(act.select(F.col("id").alias("dst")), "dst", "left_semi")
             .groupBy("src")
             .agg(F.count(F.lit(1)).alias("core_deg")),
             w,
@@ -900,7 +964,7 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 4) -> DataFrame:
 
     for _ in range(rounds):
         nxt = (
-            in_core_deg(active, n)
+            in_core_deg(active)
             .where(F.col("core_deg") >= k)
             .select(F.col("src").alias("id"))
             .localCheckpoint(eager=False)
@@ -914,7 +978,7 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 4) -> DataFrame:
             break
     if n == 0:
         return active.withColumn("core_deg", F.lit(0).cast("long")).limit(0)
-    return in_core_deg(active, n).select(F.col("src").alias("id"), "core_deg")
+    return in_core_deg(active).select(F.col("src").alias("id"), "core_deg")
 
 
 def ktruss(edges_upper: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
@@ -1060,42 +1124,66 @@ def sssp_hop_limited(
     empty edge list gives no rows; a source without edges gets only
     itself at 0.
 
-    The supersteps unroll into ONE lazy plan that reads each distance
-    vector once: a zero-weight self-loop per vertex brings its own
-    distance back through the relaxation join, and the source's 0 is
-    re-offered as a one-row constant.  The edge side (edges + self-loops)
-    is pinned once per edge frame; under ``_BCAST_MAX_ROWS`` one broadcast
-    of it serves every superstep, past it the edge exchange is reused and
+    The edges are pinned and counted once per edge frame.  At or under
+    ``_BCAST_MAX_ROWS`` rows every hop runs in one task
+    (:func:`_one_task`): one ``np.minimum.at`` per hop relaxes all edges
+    out of the previous distance vector.  Past the cap the supersteps
+    unroll into ONE lazy plan that reads each distance vector once: a
+    zero-weight self-loop per vertex brings its own distance back
+    through the relaxation join, the source's 0 is re-offered as a
+    one-row constant, the edge exchange is reused by every superstep and
     the vector leaves each aggregation hash-partitioned by ``id``.
     """
     spark = wedges.sparkSession
 
     def build():
         e = wedges.select("src", "dst", F.col("weight").cast("long").alias("w"))
-        v = e.select("src").union(e.select("dst")).distinct()
-        loops = v.select("src", F.col("src").alias("dst"), F.lit(0).cast("long").alias("w"))
-        ex = e.unionByName(loops).localCheckpoint(eager=False)
-        rows = ex.count()  # the action that materializes the pin
-        return _compact(ex, rows), rows
+        e = e.localCheckpoint(eager=False)
+        rows = e.count()  # the action that materializes the pin
+        return _compact(e, rows), rows
 
-    ex, rows = _derived(wedges, ("sssp_edges",), build)
+    e, rows = _derived(wedges, ("sssp_edges",), build)
     if rows == 0:
         return _local_values_df(spark, [], "id bigint, dist bigint")
+    if rows <= _BCAST_MAX_ROWS:
+
+        def relax(pdf):
+            import numpy as np
+            import pandas as pd
+
+            s, d = pdf["src"].to_numpy("int64"), pdf["dst"].to_numpy("int64")
+            w = pdf["w"].to_numpy("int64")
+            ids, inv = np.unique(np.concatenate([s, d, [source]]), return_inverse=True)
+            s, d = inv[: len(s)], inv[len(s) : -1]
+            unreached = np.iinfo("int64").max
+            dist = np.full(len(ids), unreached)
+            dist[inv[-1]] = 0  # the source
+            for _ in range(iterations):
+                out = dist[s] != unreached
+                nxt = dist.copy()
+                np.minimum.at(nxt, d[out], dist[s[out]] + w[out])
+                dist = nxt
+            keep = dist != unreached
+            return pd.DataFrame({"id": ids[keep], "dist": dist[keep]})
+
+        return _one_task(e, "id bigint, dist bigint", relax)
+
+    def build_loops():
+        v = e.select("src").union(e.select("dst")).distinct()
+        loops = v.select("src", F.col("src").alias("dst"), F.lit(0).cast("long").alias("w"))
+        return e.unionByName(loops).localCheckpoint(eager=True)
+
+    ex = _derived(wedges, ("sssp_loops",), build_loops)
     seed = _local_values_df(spark, [[int(source), 0]], "id bigint, dist bigint")
-    bcast = rows <= _BCAST_MAX_ROWS
-    side = F.broadcast(ex) if bcast else ex
     dist = seed
     for _ in range(iterations):
-        step = (
-            dist.join(side, F.col("id") == F.col("src"))
+        dist = (
+            dist.join(ex, F.col("id") == F.col("src"))
             .select(F.col("dst").alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
             .unionByName(seed)
             .groupBy("id")
             .agg(F.min("dist").alias("dist"))
         )
-        # past the cap the id-partitioned aggregate feeds the next join
-        # exchange-free, so only the broadcast path is _nw-collapsed
-        dist = _nw(step, _width(rows)) if bcast else step
     return dist
 
 

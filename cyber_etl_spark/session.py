@@ -50,6 +50,9 @@ def get_spark(app_name: str = "cyber-etl-spark", **extra_conf: str) -> SparkSess
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # TIMESTAMP(NANOS) parquet columns (one events layout) read as
+        # long; sources.read_table floors them to µs
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

@@ -3,8 +3,8 @@
 The engine's canonical columnar format is Parquet (the reference's feather
 checkpoints → parquet; SURVEY.md §2.1 S7/S12).  Reads are plain
 ``spark.read.parquet`` so Catalyst gets predicate pushdown, column pruning
-and partition pruning for free — no schema inference cost is paid because
-parquet carries its schema.
+and partition pruning for free; the footer schema is resolved once per
+file version and passed explicitly afterwards.
 
 At 100 TB the same call reads a partitioned directory tree
 (``.../lineitem/ship_year=1995/...``); nothing in the query layer changes.
@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -33,9 +34,21 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# (applicationId, path, st_mtime_ns, st_size) -> resolved StructType.
+# The schema is cached, never the DataFrame: a query that reads one
+# table twice and self-joins it (q191) needs two distinct relations.
+_SCHEMAS: dict[tuple, StructType] = {}
+_NANOS = "spark.sql.legacy.parquet.nanosAsLong"
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one catalog table. Accepts either ``<dir>/<name>.parquet``
     (driver layout) or a ``<dir>/<name>/`` partitioned directory.
+
+    The schema is resolved once per (session, path, file version) and
+    later reads pass it explicitly, which skips the one-task schema job
+    ``spark.read.parquet`` otherwise submits on every call.  Rewriting
+    the file changes its mtime and size, so the next read re-resolves.
 
     The events table's ``ts`` physical type has varied across driver data
     generations — TIMESTAMP(NANOS) (vectorized reader rejects it; read nanos
@@ -49,8 +62,22 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     flat = os.path.join(sf_dir, f"{name}.parquet")
     nested = os.path.join(sf_dir, name)
     path = flat if os.path.exists(flat) else nested
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    try:
+        st = os.stat(path)
+        key = (spark.sparkContext.applicationId, path, st.st_mtime_ns, st.st_size)
+    except OSError:  # not a local path (or missing): Spark resolves it
+        key = None
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        # get_spark sets the legacy conf; a session built elsewhere gets
+        # it here, once, before its first footer is read
+        if spark.conf.get(_NANOS, "false") != "true":
+            spark.conf.set(_NANOS, "true")
+        df = spark.read.parquet(path)
+        if key is not None:
+            _SCHEMAS[key] = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
     for f in df.schema.fields:
         if f.name == "ts" and f.dataType.simpleString() == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))

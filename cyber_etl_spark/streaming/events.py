@@ -56,7 +56,6 @@ def read_event_stream(
     TIMESTAMP(MICROS) read as NTZ) — callers on a MICROS-generating
     driver must pass the latter or the first arriving file would kill
     the query with a schema-convert error."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
         batch_ts = dict(spark.read.parquet(path).dtypes).get("ts", "bigint")
     except Exception:

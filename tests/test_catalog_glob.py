@@ -61,3 +61,42 @@ def test_schema_evolution_merge_read(spark, tmp_path):
     # column pruning still reaches the scan on the merged schema
     pruned = got.select("id")
     assert "lang" not in pruned.schema.fieldNames()
+
+
+def test_read_table_caches_schema_per_file_version(spark, tmp_path):
+    """``read_table`` resolves a table's schema once and reads with it
+    afterwards: both events ``ts`` layouts (TIMESTAMP(NANOS) and naive
+    TIMESTAMP(MICROS)) give the same session-tz timestamps on the
+    inferring and the cached read, and a rewritten file is re-resolved."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cyber_etl_spark.sources import catalog
+
+    micros = [1_700_000_000_123_456, 1_700_000_123_000_001]
+    layouts = {
+        "nanos": pa.array([u * 1000 + 789 for u in micros], pa.timestamp("ns")),
+        "micros": pa.array(micros, pa.timestamp("us")),
+    }
+    seen = {}
+    for layout, ts in layouts.items():
+        sf_dir = str(tmp_path / layout)
+        os.makedirs(sf_dir)
+        path = os.path.join(sf_dir, "events.parquet")
+        pq.write_table(pa.table({"event_id": [1, 2], "ts": ts}), path)
+        cached = len(catalog._SCHEMAS)
+        reads = [catalog.read_table(spark, sf_dir, "events") for _ in range(2)]
+        assert len(catalog._SCHEMAS) == cached + 1  # inferred once, then reused
+        for df in reads:
+            assert dict(df.dtypes)["ts"] == "timestamp"
+        rows = [sorted(r.ts for r in df.select("ts").collect()) for df in reads]
+        assert rows[0] == rows[1]
+        seen[layout] = rows[0]
+        # a rewrite with an added column is a new file version
+        pq.write_table(
+            pa.table({"event_id": [1, 2], "ts": ts, "user_id": [5, 6]}), path
+        )
+        again = catalog.read_table(spark, sf_dir, "events")
+        assert again.columns == ["event_id", "ts", "user_id"]
+        assert sorted(r.ts for r in again.select("ts").collect()) == seen[layout]
+    assert seen["nanos"] == seen["micros"]

@@ -14,6 +14,17 @@ def _toy_edges(spark):
     return spark.createDataFrame(rows, "src long, dst long")
 
 
+@pytest.fixture(params=["under_cap", "past_cap"])
+def cap_side(request, monkeypatch):
+    """Both sides of ``_BCAST_MAX_ROWS``: k-core and SSSP run as one-task
+    kernels at or under it and as distributed loops past it (cap 0)."""
+    from cyber_etl_spark.graph import algorithms
+
+    if request.param == "past_cap":
+        monkeypatch.setattr(algorithms, "_BCAST_MAX_ROWS", 0)
+    return request.param
+
+
 def test_louvain_finds_planted_communities(spark):
     from cyber_etl_spark.graph.algorithms import louvain_level, modularity
 
@@ -202,7 +213,7 @@ def test_louvain_hierarchy_refines_level(spark):
     ) - 1e-9
 
 
-def test_kcore_peel_semantics(spark):
+def test_kcore_peel_semantics(spark, cap_side):
     """On a path-plus-clique graph the 2-core is exactly the clique: the
     path tail peels off over successive rounds (degree-1 endpoints
     cascade), which a single-round degree filter would get wrong."""
@@ -219,7 +230,7 @@ def test_kcore_peel_semantics(spark):
     assert kcore(edges, k=4, rounds=5).count() == 0
 
 
-def test_sssp_prefers_cheap_multi_hop(spark):
+def test_sssp_prefers_cheap_multi_hop(spark, cap_side):
     """Integer Bellman-Ford must take a cheaper 2-hop route over an
     expensive direct edge, and respect the hop limit."""
     from cyber_etl_spark.graph.algorithms import sssp_hop_limited
@@ -237,7 +248,7 @@ def test_sssp_prefers_cheap_multi_hop(spark):
     assert d1 == {0: 0, 1: 10, 2: 1}  # one relaxation: direct edges only
 
 
-def test_sssp_source_without_edges(spark):
+def test_sssp_source_without_edges(spark, cap_side):
     """A source outside a non-empty graph is reached at distance 0 and
     nothing else; an empty edge list is an empty graph and gives no
     rows, with the (id bigint, dist bigint) schema."""
@@ -281,6 +292,87 @@ def test_sssp_submits_no_job_per_superstep(spark):
     assert jobs[2] == jobs[6]
     assert dists[2] == {0: 0, 1: 3, 2: 1, 3: 11}
     assert dists[6] == {0: 0, 1: 3, 2: 1, 3: 4, 4: 11}
+
+
+def _random_graph(spark, seed: int, n: int = 40, m: int = 80):
+    """Seeded random graph with duplicate and self-loop edges: (src, dst)
+    as drawn, and a symmetric weighted list for SSSP."""
+    import random
+
+    rnd = random.Random(seed)
+    pairs = [(rnd.randrange(n), rnd.randrange(n)) for _ in range(m)]
+    weighted = [(a, b, rnd.randint(1, 9)) for a, b in pairs]
+    weighted += [(b, a, w) for a, b, w in weighted]
+    return (
+        spark.createDataFrame(pairs, "src long, dst long"),
+        spark.createDataFrame(weighted, "src long, dst long, weight long"),
+    )
+
+
+def test_kcore_sssp_local_equals_distributed(spark, monkeypatch):
+    """The one-task kernels and the distributed loops are two plans for
+    one computation: on a seeded random graph they must agree row for
+    row, for every k, round count, hop count and an outside source."""
+    from cyber_etl_spark.graph import algorithms
+
+    def run_all():
+        edges, wedges = _random_graph(spark, seed=7)
+        kc = {
+            (k, r): sorted(map(tuple, algorithms.kcore(edges, k=k, rounds=r).collect()))
+            for k in (2, 3, 4)
+            for r in range(1, 6)
+        }
+        sp = {
+            (src, it): sorted(
+                map(tuple, algorithms.sssp_hop_limited(wedges, src, iterations=it).collect())
+            )
+            for src in (0, 999)
+            for it in range(7)
+        }
+        empty = algorithms.kcore(spark.createDataFrame([], "src long, dst long"), k=2)
+        return kc, sp, (empty.collect(), empty.schema.simpleString())
+
+    local = run_all()
+    monkeypatch.setattr(algorithms, "_BCAST_MAX_ROWS", 0)
+    distributed = run_all()
+    assert local == distributed
+    kc, sp, empty = local
+    # non-trivial peels: k and the round count both matter, and k=4 empties
+    assert len({tuple(v) for v in kc.values()}) > 5 and kc[(4, 5)] == []
+    assert sp[(999, 6)] == [(999, 0)]
+    assert len(sp[(0, 6)]) > len(sp[(0, 1)]) > 1
+    assert empty == ([], "struct<id:bigint,core_deg:bigint>")
+
+
+def test_kcore_sssp_warm_call_is_one_task(spark):
+    """Under the cap, once the memoized edge side and counts exist, a
+    warm call submits no job while it builds and its result runs as one
+    job of one task — the whole loop in a single kernel."""
+    from cyber_etl_spark.graph.algorithms import kcore, sssp_hop_limited
+
+    edges, wedges = _random_graph(spark, seed=3)
+    calls = {
+        "kcore": lambda: kcore(edges, k=3, rounds=4),
+        "sssp": lambda: sssp_hop_limited(wedges, 0, iterations=6),
+    }
+    for make in calls.values():
+        make().collect()  # derives the pinned edge side and its counts
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for name, make in calls.items():
+        built, ran = f"warm-build-{name}", f"warm-run-{name}"
+        try:
+            sc.setJobGroup(built, built)
+            out = make()
+            sc.setJobGroup(ran, ran)
+            out.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert tracker.getJobIdsForGroup(built) == [], name
+        jobs = tracker.getJobIdsForGroup(ran)
+        assert len(jobs) == 1, name
+        stages = tracker.getJobInfo(jobs[0]).stageIds
+        assert [tracker.getStageInfo(st).numTasks for st in stages] == [1], name
 
 
 @pytest.mark.parametrize("name", ["q128_kcore", "q129_sssp"])
