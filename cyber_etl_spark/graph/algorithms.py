@@ -224,43 +224,66 @@ def _plan_barrier(df: DataFrame) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _sym(edges: DataFrame) -> DataFrame:
-    """Symmetrize (undirected semantics) and MATERIALIZE the edge list.
+def _pin_counted(df: DataFrame, **stats) -> tuple[DataFrame, dict]:
+    """Pin ``df`` (eager ``localCheckpoint``) and return it with its row
+    count ``n`` and the aggregate ``stats`` (name → Column), observed in
+    the pin's own job: no count or collect job after it.  The eager pin
+    is a tracked SQL execution, so the observation is complete when it
+    returns."""
+    obs = Observation()
+    aggs = [F.count(F.lit(1)).alias("n")] + [c.alias(k) for k, c in stats.items()]
+    pinned = df.observe(obs, *aggs).localCheckpoint(eager=True)
+    return pinned, obs.get
+
+
+def _sym_counted(edges: DataFrame) -> tuple[DataFrame, int]:
+    """Symmetrize (undirected semantics) and MATERIALIZE the edge list,
+    with its row count — one derivation per edge frame.
 
     Every superstep references the edges; without materialization Spark
     re-executes the upstream plan (e.g. the co-supply self-join, or a
     whole similarity-join pipeline) once per iteration per action —
     the classic iterative-algorithm trap.  localCheckpoint pins the
-    computed edge partitions in executor storage once.
+    computed edge partitions in executor storage once, and the count is
+    observed in that pin.  Builders that pin a symmetric frame
+    themselves mark it (``_cyber_symmetric``, and ``_cyber_rows`` when
+    they observed its count): neither is redone here.
     """
 
     def build():
-        # Builders that already emit both directions mark their frames
-        # (`_cyber_symmetric`): the union+distinct would be an identity
-        # there, so skip the extra 2|E|-row shuffle entirely.
         if getattr(edges, "_cyber_symmetric", False):
+            # the union+distinct would be an identity: skip the extra
+            # 2|E|-row shuffle entirely
             base = edges.select("src", "dst")
+            n = getattr(edges, "_cyber_rows", None)
+            if n is None:
+                n = base.count()
         else:
-            base = (
+            base, st = _pin_counted(
                 edges.select("src", "dst")
                 .union(
                     edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
                 )
                 .distinct()
-                .localCheckpoint(eager=True)
             )
+            n = st["n"]
         # coalesce is narrow — re-reading the checkpoint merged into
         # right-sized partitions costs nothing and every superstep that
         # scans the edges schedules proportionally fewer tasks
-        return _compact(base, base.count())
+        return _compact(base, n), n
 
     return _derived(edges, ("sym",), build)
 
 
-def _ecount(edges: DataFrame, e: DataFrame) -> int:
-    """Edge count of the (checkpointed) symmetrized list, memoized with
-    the other derived tables — sizes the loops' shuffle width."""
-    return _derived(edges, ("symcount",), lambda: e.count())
+def _sym(edges: DataFrame) -> DataFrame:
+    """The pinned symmetric edge list of :func:`_sym_counted`."""
+    return _sym_counted(edges)[0]
+
+
+def _ecount(edges: DataFrame) -> int:
+    """Row count of :func:`_sym`'s edge list — sizes the loops' shuffle
+    width and their broadcast-or-shuffle choice."""
+    return _sym_counted(edges)[1]
 
 
 def _vertices(edges: DataFrame) -> tuple[DataFrame, int]:
@@ -303,7 +326,7 @@ def connected_components(
     # sum exact for billions of 64-bit ids (no i64 overflow, no double
     # rounding).
     prev_sum = None
-    w = _width(_ecount(edges, e))
+    w = _width(_ecount(edges))
     # Label/neighbor-min/hooked frames are all ≤|V| rows: under the cap
     # broadcast them into every per-superstep join (the loop-family
     # policy) — stats-less state frames otherwise plan SortMergeJoins
@@ -420,7 +443,11 @@ def pagerank(
         ("deg-compact", weight_col),
         lambda: _compact(deg, n).localCheckpoint(eager=True),  # reused every superstep
     )
-    m = _derived(edges, ("ecount", weight_col), lambda: e.count())
+    m = (
+        _ecount(edges)
+        if weight_col is None
+        else _derived(edges, ("ecount", weight_col), lambda: e.count())
+    )
     if variant == "articlerank":
         avg_deg = deg.agg(F.avg("deg")).collect()[0][0]
         denom = F.col("deg") + F.lit(float(avg_deg))
@@ -530,7 +557,7 @@ def label_propagation(
     vertices, n = _vertices(edges)
     labels = vertices.withColumn("community", F.col("id"))
     bcast = n <= _BCAST_MAX_ROWS  # label vector small → map-side join
-    w = _width(_ecount(edges, e))
+    w = _width(_ecount(edges))
     for i in range(iterations):
         # ONE exchange replaces the former count-then-argmax pair:
         # mode(community, deterministic=True) is EXACTLY "most frequent
@@ -572,7 +599,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> float:
     (labels: id, community) over an undirected edge list."""
     e = _sym(edges)
     deg = e.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
-    m = e.count() / 2.0
+    m = _ecount(edges) / 2.0
     ca = labels.select(F.col("id").alias("src"), F.col("community").alias("c_src"))
     cb = labels.select(F.col("id").alias("dst"), F.col("community").alias("c_dst"))
     internal = (
@@ -622,7 +649,7 @@ def louvain_level(
     """
     if weight_col is None:
         e = _sym(edges).withColumn("w", F.lit(1.0))
-        e_rows = _ecount(edges, _sym(edges))
+        e_rows = _ecount(edges)
     else:
         e = edges.select(
             "src", "dst", F.col(weight_col).cast("double").alias("w")
@@ -787,7 +814,7 @@ def louvain(
         # the contraction/remap tables are community-count-sized — run
         # their materializations at the same right-sized width as the
         # local-move loops
-        w_stage = _width(_ecount(edges, _sym(edges)))
+        w_stage = _width(_ecount(edges))
         contracted = (
             _nw(
                 cur_edges.join(bsrc, "src")
@@ -839,7 +866,7 @@ def bfs_distances(
     settled = [dist0]
     dist = dist0
     frontier = dist0.select("id")
-    w = _width(_ecount(edges, e))
+    w = _width(_ecount(edges))
     # the settled set is ≤ |V| BY CONSTRUCTION (one row per reached
     # vertex), so one memoized node bound decides broadcastability for
     # the whole loop (the CC policy)
@@ -920,7 +947,7 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 4) -> DataFrame:
     loop-state discipline, and the edge side never re-shuffles.
     """
     e = _sym(edges)
-    m = _ecount(edges, e)
+    m = _ecount(edges)
     if m <= _BCAST_MAX_ROWS:
 
         def peel(pdf):
@@ -1079,7 +1106,7 @@ def multi_bfs_distances(
     settled = [dist0]
     dist = dist0
     frontier = dist0.select("pivot", "id")
-    w = _width(_ecount(edges, e))
+    w = _width(_ecount(edges))
     # state is ≤ |pivots|·|V| rows BY CONSTRUCTION — one up-front bound
     # (the betweenness policy) decides the anti-join's broadcast for the
     # whole loop; the expansion join stays frontier-keyed (its key is
@@ -1124,8 +1151,9 @@ def sssp_hop_limited(
     empty edge list gives no rows; a source without edges gets only
     itself at 0.
 
-    The edges are pinned and counted once per edge frame.  At or under
-    ``_BCAST_MAX_ROWS`` rows every hop runs in one task
+    The edges are pinned and counted once per edge frame — not at all
+    when the frame's builder pinned it and recorded ``_cyber_rows``.  At
+    or under ``_BCAST_MAX_ROWS`` rows every hop runs in one task
     (:func:`_one_task`): one ``np.minimum.at`` per hop relaxes all edges
     out of the previous distance vector.  Past the cap the supersteps
     unroll into ONE lazy plan that reads each distance vector once: a
@@ -1138,6 +1166,9 @@ def sssp_hop_limited(
 
     def build():
         e = wedges.select("src", "dst", F.col("weight").cast("long").alias("w"))
+        rows = getattr(wedges, "_cyber_rows", None)
+        if rows is not None:  # pinned and counted by its builder
+            return e, rows
         e = e.localCheckpoint(eager=False)
         rows = e.count()  # the action that materializes the pin
         return _compact(e, rows), rows

@@ -30,8 +30,10 @@ def co_supply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole graph-query suite (weighted rows are exactly the distinct
     # pairs), materialized once per (session, dataset).
     def build():
-        edges = co_supply_edges_weighted(spark, sf_dir).select("src", "dst")
+        weighted = co_supply_edges_weighted(spark, sf_dir)
+        edges = weighted.select("src", "dst")
         edges._cyber_symmetric = True  # both directions present by construction
+        edges._cyber_rows = weighted._cyber_rows
         return edges
 
     return artifact(spark, sf_dir, "edges", build)
@@ -57,42 +59,33 @@ def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the chunk threshold are decomposed into chunk-pair rows and
     # scattered across the cluster (operators/skew.chunked_pair_expand)
     # — bounded task input regardless of the hottest key's degree.
-    li = read_table(spark, sf_dir, "lineitem")
-    sup = li.groupBy(F.col("l_partkey").alias("p")).agg(
-        F.sort_array(F.collect_set("l_suppkey")).alias("ss")
-    )
-    # fewer, larger expansion tasks make the partial aggregation over the
-    # pair keys far more effective (each task covers more of the key
-    # space before the shuffle).  The coalesce is lazy — same single job
-    # — and sized off the fact-table row count (a metadata-cheap count),
-    # so at real scale the target exceeds the current partitions and
-    # nothing changes.
-    from .algorithms import _compact
+    from ..operators.skew import chunked_pair_expand
+    from .algorithms import _pin_counted
 
+    li = read_table(spark, sf_dir, "lineitem")
     # Materialize the per-part supplier sets BEFORE expansion: the
     # expansion plan references `sup` from multiple generator branches,
     # and without a checkpoint each branch re-runs the collect_set
-    # aggregation over the fact table.  The materialized aggregate is
-    # tiny (one row per part) and also makes the max-degree statistic a
-    # near-free scan.
-    sup = (
-        _compact(sup, li.count(), rows_per_part=5_000_000)
-        .localCheckpoint(eager=True)
+    # aggregation over the fact table.  The max-degree statistic is
+    # observed in the pin's own job; AQE's coalescing sizes its
+    # partitions.
+    sup, st = _pin_counted(
+        li.groupBy(F.col("l_partkey").alias("p")).agg(
+            F.sort_array(F.collect_set("l_suppkey")).alias("ss")
+        ),
+        max_deg=F.max(F.size("ss")),
     )
-    max_deg = sup.agg(F.max(F.size("ss"))).collect()[0][0] or 0
-    from ..operators.skew import chunked_pair_expand
-
-    upper = (
+    upper, st_upper = _pin_counted(  # materialize the half; mirror is free
         # max_size: observed stat lets the operator drop the heavy-path
         # branches entirely when no key is actually skewed (the common
         # case); a genuinely hot part still takes the chunk-scatter path.
-        chunked_pair_expand(sup, "ss", chunk=4096, max_size=max_deg)
+        chunked_pair_expand(sup, "ss", chunk=4096, max_size=st["max_deg"] or 0)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("weight"))
-        .localCheckpoint(eager=True)  # materialize the half; mirror is free
     )
     edges = upper.unionByName(
         upper.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
     )
     edges._cyber_symmetric = True  # mirror union emits both directions
+    edges._cyber_rows = 2 * st_upper["n"]  # the mirror rows are disjoint (src < dst)
     return edges

@@ -31,14 +31,21 @@ assembly is a driver-side table build — the same "small boundary table"
 pattern as q146's bin edges.  Groups whose values are all NULL are
 omitted (callers in this repo only use non-null measure columns).
 
-Replaces the in-memory ``percentile`` in q61/q112/q130/q146 and the
-graph-backbone p95 threshold; ``tests/test_plans.py`` bans the exact
-``percentile(`` aggregate from every registered query's plan so it
-cannot creep back.
+Replaces the in-memory ``percentile`` in q61/q112/q130/q146;
+``tests/test_plans.py`` bans the exact ``percentile(`` aggregate from
+every registered query's plan so it cannot creep back.
+
+:func:`histogram_quantiles` is the other physical operator for the same
+numbers, chosen by the data's shape: a column with FEW distinct values
+(the graph backbones' integer co-supply weights: 39 values at sf0.1)
+needs no range partition — one ``groupBy(value).count()`` histogram
+reaches the driver and the ranks are read off its running counts.
 """
 
 from __future__ import annotations
 
+import bisect
+import itertools
 import math
 from typing import Iterable, Mapping, Sequence
 
@@ -129,6 +136,11 @@ def _local_values_df(spark, rows: list[list], schema: StructType | str):
     return spark.sql(f"SELECT {cols} FROM (VALUES {body})")
 
 
+# Most rows a quantile kernel's driver-side control table (the
+# (partition, group) counts, or the value histogram) may hold.
+_MAX_CONTROL_ROWS = 1_000_000
+
+
 def _interpolate(p: float, n: int, at: dict[int, float]) -> float | None:
     """Spark Percentile.getPercentile: rank = p*(n-1); linear between
     floor and ceil with (higher-pos)*lower + (pos-lower)*higher."""
@@ -149,7 +161,7 @@ def exact_quantiles(
     group_cols: Sequence[str] = (),
     num_partitions: int | None = None,
     weight_col: str | None = None,
-    max_control_rows: int = 1_000_000,
+    max_control_rows: int = _MAX_CONTROL_ROWS,
     group_probs: Mapping[tuple, Mapping[str, float]] | None = None,
 ) -> DataFrame:
     """Exact quantiles of ``value_col`` per group.
@@ -373,3 +385,55 @@ def exact_quantiles(
             qs = [at.get(g, {}).get(p * totals[g]) for p in pvals]
         out_rows.append(list(g) + qs)
     return _local_values_df(spark, out_rows, res_schema)
+
+
+def histogram_quantiles(
+    df: DataFrame, value_col: str, probs: Mapping[str, float]
+) -> dict[str, float | None]:
+    """Exact quantiles of a DISCRETE column with few distinct values →
+    ``{alias: value}`` (None for each alias when the column has no
+    non-NULL value): the numbers ``exact_quantiles(df, value_col,
+    probs)`` returns as its one row, from one histogram aggregate.
+
+    ``groupBy(value).count()`` collects one row per distinct value; the
+    value at global rank r is the first whose running count exceeds r,
+    and :func:`_interpolate` applies Spark's ``Percentile`` formula to
+    the floor/ceil ranks, so the result equals ``quantile_cont`` bit for
+    bit.  No range partition, no pin, no Python task: the histogram job
+    is all it costs, so callers can filter on the result as a literal.
+
+    For high-cardinality columns (doubles, timestamps) the histogram is
+    as large as the data; the collect is bounded at
+    ``_MAX_CONTROL_ROWS`` distinct values and raises past it — use
+    :func:`exact_quantiles` there.
+    """
+    cap = _MAX_CONTROL_ROWS
+    hist = (
+        df.select(F.col(value_col).cast("double").alias("_v"))
+        .where(F.col("_v").isNotNull())
+        .groupBy("_v")
+        .count()
+        .limit(cap + 1)
+        .collect()
+    )
+    if len(hist) > cap:
+        raise ValueError(
+            f"histogram_quantiles: {value_col!r} has more than {cap} distinct"
+            " values; this operator is for discrete columns with few values"
+            " — use exact_quantiles"
+        )
+    # ascending value order, NaN last (Spark's sort order for doubles)
+    hist.sort(key=lambda r: (r["_v"] != r["_v"], r["_v"]))
+    vals = [r["_v"] for r in hist]
+    cum = list(itertools.accumulate(r["count"] for r in hist))
+    n = cum[-1] if cum else 0
+
+    def at(rank: int) -> float:
+        return vals[bisect.bisect_right(cum, rank)]
+
+    out: dict[str, float | None] = {}
+    for alias, p in probs.items():
+        pos = p * (n - 1)
+        lo, hi = math.floor(pos), math.ceil(pos)
+        out[alias] = _interpolate(p, n, {lo: at(lo), hi: at(hi)}) if n else None
+    return out

@@ -348,7 +348,7 @@ def q43_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an inline union+distinct would re-shuffle 2|E| rows per execution.
     e = _sym(edges)
     deg = e.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
-    m = _ecount(edges, e) / 2.0
+    m = _ecount(edges) / 2.0
     ca = labels.withColumnRenamed("id", "src").withColumnRenamed("community", "c_src")
     cb = labels.withColumnRenamed("id", "dst").withColumnRenamed("community", "c_dst")
     internal = (
@@ -627,18 +627,19 @@ se AS (SELECT src, dst FROM ew, qq WHERE w >= q99)
 def _sparse_upper_edges_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P95-weight backbone WITH the co-supply weight kept — the frame
     q404's spanning forest orders by; :func:`_sparse_upper_edges` is a
-    projection of this one, so the quantile kernel and the checkpoint
-    run once per (session, dataset) regardless of which form consumers
-    ask for."""
+    projection of this one, so the threshold and the checkpoint run once
+    per (session, dataset) regardless of which form consumers ask for.
+    The weights are integer counts with few distinct values, so the
+    threshold comes from their histogram and filters as a literal."""
     from ..graph.builder import co_supply_edges_weighted
-    from ..operators.quantiles import exact_quantiles
+    from ..operators.quantiles import histogram_quantiles
 
     def build():
         w = co_supply_edges_weighted(spark, sf_dir).where(F.col("src") < F.col("dst"))
-        q99 = exact_quantiles(w, "weight", {"q99": 0.95})
+        q99 = histogram_quantiles(w, "weight", {"q99": 0.95})["q99"]
+        # no edges: a NULL threshold keeps no row, as `w >= NULL` does
         return (
-            w.crossJoin(F.broadcast(q99))
-            .where(F.col("weight") >= F.col("q99"))
+            w.where(F.col("weight") >= F.lit(q99))
             .select("src", "dst", "weight")
             .localCheckpoint(eager=True)
         )
@@ -649,9 +650,9 @@ def _sparse_upper_edges_w(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sparse_upper_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P95-weight backbone of the co-supply graph, i<j orientation —
     the standard sparsification before cubic-ish analytics (triangles,
-    node similarity): the quantile is one tiny aggregate, broadcast back
-    as the filter threshold.  Materialized once per (session, dataset);
-    q89/q157 and :func:`_sparse_sym_edges` all reuse the same frame."""
+    node similarity).  A projection of the pinned
+    :func:`_sparse_upper_edges_w`, memoized so q89/q157 and their peers
+    share one frame object."""
     return artifact(
         spark, sf_dir, "se",
         lambda: _sparse_upper_edges_w(spark, sf_dir).select("src", "dst"),
@@ -659,19 +660,20 @@ def _sparse_upper_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sparse_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both directions of :func:`_sparse_upper_edges`, pinned once per
-    (session, dataset) — the neighborhood form q90 and q185 join on and
-    the undirected edge list q100, q128 and q162 iterate over.  A
-    duplicate-free i<j list plus its mirror is symmetric and
-    duplicate-free, so the frame is marked ``_cyber_symmetric`` and the
-    graph loops' memoized derivations key on this one object."""
+    """Both directions of :func:`_sparse_upper_edges` — the neighborhood
+    form q90 and q185 join on and the undirected edge list q100, q128
+    and q162 iterate over.  A projection of the pinned
+    :func:`_sparse_sym_weighted`: the same rows, pinned and counted once.
+    A duplicate-free i<j list plus its mirror is symmetric and
+    duplicate-free, so the frame is marked ``_cyber_symmetric`` (with
+    its observed ``_cyber_rows``) and the graph loops' memoized
+    derivations key on this one object without re-counting it."""
 
     def build():
-        se = _sparse_upper_edges(spark, sf_dir)
-        sym = se.unionByName(
-            se.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).localCheckpoint(eager=True)
+        symw, _ = _sparse_sym_weighted(spark, sf_dir)
+        sym = symw.select("src", "dst")
         sym._cyber_symmetric = True
+        sym._cyber_rows = symw._cyber_rows
         return sym
 
     return artifact(spark, sf_dir, "sym", build)
@@ -811,18 +813,23 @@ def _sparse_sym_weighted(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, int | None]:
     """Symmetric (both directions) P95 backbone WITH integer weights —
-    the substrate for weighted traversals (SSSP): the pinned
-    :func:`_sparse_upper_edges_w` and its mirror, with the backbone's
-    lowest vertex id (None when it is empty), cached per (session,
-    dataset)."""
+    the substrate for weighted traversals (SSSP) and, projected, of
+    :func:`_sparse_sym_edges`: :func:`_sparse_upper_edges_w` and its
+    mirror pinned ONCE, with the backbone's lowest vertex id (None when
+    it is empty), cached per (session, dataset)."""
+    from ..graph.algorithms import _pin_counted
 
     def build():
         w = _sparse_upper_edges_w(spark, sf_dir)
-        symw = w.unionByName(
-            w.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
-        ).localCheckpoint(eager=True)
-        # i<j orientation: the lowest vertex id is the lowest src
-        return symw, w.agg(F.min("src")).collect()[0][0]
+        # the row count and the lowest vertex id are observed in the pin
+        symw, st = _pin_counted(
+            w.unionByName(
+                w.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
+            ),
+            lo=F.min("src"),
+        )
+        symw._cyber_rows = st["n"]
+        return symw, st["lo"]
 
     return artifact(spark, sf_dir, "symw", build)
 
@@ -2277,20 +2284,19 @@ def q406_incremental_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
     q382/q401 delta-view discipline applied to graph structure).
     Determinism: same strict (w DESC, src, dst) order, unique forest,
     bit-equal across engines."""
-    from ..operators.mst import boruvka_msf
-    from ..operators.quantiles import exact_quantiles
-
     from ..graph.builder import co_supply_edges_weighted
+    from ..operators.mst import boruvka_msf
+    from ..operators.quantiles import histogram_quantiles
 
     wedges = co_supply_edges_weighted(spark, sf_dir).where(
         F.col("src") < F.col("dst")
     )
-    qs = exact_quantiles(wedges, "weight", {"p90": 0.90, "p95": 0.95})
+    # integer weights with few distinct values: the histogram's literals
+    qs = histogram_quantiles(wedges, "weight", {"p90": 0.90, "p95": 0.95})
     delta = (
-        wedges.crossJoin(F.broadcast(qs))
-        .where(
-            (F.col("weight") >= F.col("p90"))
-            & (F.col("weight") < F.col("p95"))
+        wedges.where(
+            (F.col("weight") >= F.lit(qs["p90"]))
+            & (F.col("weight") < F.lit(qs["p95"]))
             & F.expr(_Q406_SLICE_SPARK)
         )
         .select("src", "dst", F.col("weight").cast("long").alias("w"))
@@ -2299,8 +2305,8 @@ def q406_incremental_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the maintained input ONCE: it feeds >= 4 scans (node set,
     # crossing-edge joins of the Borůvka tail, the final weight join),
     # each of which would otherwise re-run the delta chain — the
-    # quantile broadcast join + md5 slice over the full co-supply edge
-    # set (r12 profiling: ~2 s/rescan at sf0.1; the pin is V-1+|Δ| rows)
+    # band filter + md5 slice over the full co-supply edge set (r12
+    # profiling: ~2 s/rescan at sf0.1; the pin is V-1+|Δ| rows)
     union_input = (
         base.unionByName(delta)
         .select("src", "dst", "w", (-F.col("w")).alias("d"))

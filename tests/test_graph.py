@@ -442,3 +442,103 @@ def test_betweenness_star_center_dominates(spark):
     out = {r.id: r.bc for r in betweenness_sampled(edges, list(range(5)), 3).collect()}
     assert out[0] == 12.0
     assert all(out[i] == 0.0 for i in range(1, 5))
+
+
+@pytest.fixture
+def fresh_store(monkeypatch):
+    """An empty artifact store: every shared artifact builds again."""
+    from cyber_etl_spark import session
+
+    monkeypatch.setattr(session, "_ARTIFACTS", session.SessionMemo())
+    monkeypatch.setattr(session, "BUILD_LOG", {})
+    monkeypatch.setattr(session, "BUILD_COUNT", {})
+    return session
+
+
+def test_backbone_cold_build_job_budget(spark, sf_correct, fresh_store):
+    """Cold, the co-supply backbone (weighted edges, P95 filter, one
+    symmetric pin) plus the first q128 and q129 calls submit at most 12
+    jobs: every statistic comes from a job that already runs."""
+    from cyber_etl_spark.plans import QUERIES
+    from cyber_etl_spark.sources import read_table
+
+    read_table(spark, sf_correct, "lineitem")  # the schema job is not the backbone's
+    sc = spark.sparkContext
+    group = "cold-backbone"
+    try:
+        sc.setJobGroup(group, group)
+        for name in ("q128_kcore", "q129_sssp"):
+            QUERIES[name].builder(spark, sf_correct).write.format("noop").mode(
+                "overwrite"
+            ).save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 12, len(jobs)
+    assert fresh_store.BUILD_COUNT == {
+        f"sf0.01:{a}": 1 for a in ("weighted", "w", "symw", "sym")
+    }
+
+
+def test_backbone_observed_stats_match_counts(spark, sf_correct, fresh_store):
+    """The row counts and lowest vertex id observed in the backbone pins
+    equal ``count()`` and ``agg(min)`` over the pinned frames."""
+    from cyber_etl_spark.graph.algorithms import _ecount
+    from cyber_etl_spark.graph.builder import co_supply_edges, co_supply_edges_weighted
+    from cyber_etl_spark.plans.graphops import _sparse_sym_edges, _sparse_sym_weighted
+
+    weighted = co_supply_edges_weighted(spark, sf_correct)
+    assert weighted._cyber_rows == weighted.count() > 0
+    assert co_supply_edges(spark, sf_correct)._cyber_rows == weighted._cyber_rows
+    symw, lo = _sparse_sym_weighted(spark, sf_correct)
+    assert symw._cyber_rows == symw.count() > 0
+    assert lo == symw.agg(F.min("src")).collect()[0][0]
+    sym = _sparse_sym_edges(spark, sf_correct)
+    assert _ecount(sym) == sym.count() == symw._cyber_rows
+
+
+def test_observation_after_eager_pin_returns(spark):
+    """An ``Observation`` read after an eager ``localCheckpoint`` holds
+    the pin's metrics at once — on a shuffled frame (AQE stage jobs) and
+    on an empty one; a read that blocks would fail the timeout, not hang
+    the suite.  ``_sym`` counts an unmarked edge list in its pin."""
+    import threading
+
+    from cyber_etl_spark.graph.algorithms import _ecount, _pin_counted, _sym
+
+    agg = spark.range(1000).select((F.col("id") % 17).alias("k")).groupBy("k").count()
+    for df, want in ((agg, {"n": 17, "lo": 0}), (agg.where("k < 0"), {"n": 0, "lo": None})):
+        out = {}
+        t = threading.Thread(
+            target=lambda: out.setdefault("st", _pin_counted(df, lo=F.min("k"))[1]),
+            daemon=True,
+        )
+        t.start()
+        t.join(timeout=120)
+        assert not t.is_alive(), "Observation.get blocked after the eager pin"
+        assert out["st"] == want
+    edges = _toy_edges(spark)
+    assert _ecount(edges) == _sym(edges).count() == 2 * 13
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q89_triangles",
+        "q90_node_similarity",
+        "q100_community_revenue",
+        "q128_kcore",
+        "q129_sssp",
+        "q157_ktruss",
+        "q162_betweenness_sampled",
+        "q404_mst_backbone",
+        "q406_incremental_msf",
+    ],
+)
+def test_backbone_consumers_match_oracle(spark, sf_correct, name):
+    """Every consumer of the histogram-thresholded backbone (and q406's
+    histogram band) matches its DuckDB oracle at sf0.01."""
+    from cyber_etl_spark.testing import compare_query
+
+    res = compare_query(spark, sf_correct, name)
+    assert res.ok, f"{name}: {res.detail}"

@@ -11,7 +11,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from cyber_etl_spark.operators.quantiles import exact_quantiles
+from cyber_etl_spark.operators import quantiles
+from cyber_etl_spark.operators.quantiles import exact_quantiles, histogram_quantiles
 from cyber_etl_spark.sources import read_table
 
 
@@ -223,3 +224,55 @@ def test_bounded_group_contract_enforced(spark):
     # under the bound the same frame works
     out = exact_quantiles(df, "v", {"p50": 0.5}, ["g"], max_control_rows=10_000)
     assert out.count() == 200
+
+
+_HIST_PROBS = {"p0": 0.0, "p50": 0.5, "p90": 0.9, "p95": 0.95, "p100": 1.0}
+
+
+@pytest.mark.parametrize(
+    "values",
+    [
+        [3, 3, 3, 7, 7, 1, 1, 1, 1, 9],  # ties straddling the marks
+        [5],  # n = 1
+        [],  # empty input
+        [None, 4, None, 2, 2, 8, None],  # NULLs are dropped
+        [None, None],  # only NULLs: as empty
+        [(i * 7919) % 41 for i in range(997)],  # few values, many rows
+    ],
+    ids=["ties", "n1", "empty", "nulls", "all_null", "few_values"],
+)
+def test_histogram_quantiles_match_exact_kernel(spark, values):
+    """On integer columns the histogram reads the same floor/ceil ranks
+    and interpolates with the same formula as the range-partition
+    kernel: equal to the last bit, None for every alias with no rows."""
+    df = spark.createDataFrame([(v,) for v in values], "v long")
+    want = exact_quantiles(df, "v", _HIST_PROBS).collect()
+    got = histogram_quantiles(df, "v", _HIST_PROBS)
+    if any(v is not None for v in values):
+        assert got == want[0].asDict()
+    else:
+        assert want == [] and got == dict.fromkeys(_HIST_PROBS)
+
+
+def test_histogram_quantiles_backbone_weights(spark, sf_smoke):
+    """The co-supply weights the graph backbones threshold on: the
+    histogram's P90/P95 equal the range-partition kernel's."""
+    from cyber_etl_spark.graph.builder import co_supply_edges_weighted
+
+    w = co_supply_edges_weighted(spark, sf_smoke).where(F.col("src") < F.col("dst"))
+    probs = {"p90": 0.9, "p95": 0.95}
+    assert histogram_quantiles(w, "weight", probs) == (
+        exact_quantiles(w, "weight", probs).collect()[0].asDict()
+    )
+
+
+def test_histogram_quantiles_cap(spark, monkeypatch):
+    """At the control-row cap the histogram is collected whole; one
+    distinct value past it the helper refuses instead of shipping a
+    high-cardinality column to the driver."""
+    df = spark.range(50).select((F.col("id") % 5).alias("v"))
+    monkeypatch.setattr(quantiles, "_MAX_CONTROL_ROWS", 5)
+    assert histogram_quantiles(df, "v", {"med": 0.5}) == {"med": 2.0}
+    monkeypatch.setattr(quantiles, "_MAX_CONTROL_ROWS", 4)
+    with pytest.raises(ValueError, match="more than 4 distinct values"):
+        histogram_quantiles(df, "v", {"med": 0.5})
