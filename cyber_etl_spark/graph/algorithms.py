@@ -22,8 +22,6 @@ list and the rank/label state by vertex id so each superstep co-locates,
 
 from __future__ import annotations
 
-import atexit
-import shutil
 import threading
 import weakref
 from contextlib import contextmanager
@@ -181,47 +179,35 @@ def _compact(df: DataFrame, rows_hint: int, rows_per_part: int = 200_000) -> Dat
     return df.coalesce(target) if target < cur else df
 
 
-_BARRIER_DIRS: dict[str, str] = {}
-_BARRIER_LOCK = threading.Lock()
+def _pin(df: DataFrame, w: int, eager: bool) -> DataFrame:
+    """Pin one superstep's loop state: ``coalesce(w)``, ``localCheckpoint``,
+    and hand back the pinned rows as a fresh frame with no statistics.
 
+    A checkpointed frame keeps the size estimate of the plan that made
+    it.  A state that joins itself multiplies two such estimates every
+    superstep, so ``sizeInBytes`` doubles its digit count per superstep
+    (43, 106, 231, 482 … digits) and Catalyst's statistics pass turns
+    exponential: chained pins ran flat for ~14 supersteps, then ×2-3 per
+    superstep, all of it on the driver after the last job ended.
+    Re-wrapping the checkpoint's RDD as a new relation (no job, no
+    Python round trip — never ``createDataFrame(df.rdd)``) drops the
+    inherited estimate; the new frame reports the session default
+    (``spark.sql.defaultSizeInBytes``) like any RDD-backed relation.
 
-def _plan_barrier(df: DataFrame) -> DataFrame:
-    """Sever a chained-superstep frame COMPLETELY via a parquet
-    round-trip, returning a plain scan-backed DataFrame.
-
-    Measured finding (r12 s4, the q405 hang): a superstep loop whose
-    state frame references its predecessor MORE THAN ONCE per iteration
-    (min-label CC joins `labels` into both the neighbor-min agg and the
-    hook, then self-joins the hooked frame for pointer jumping)
-    develops exponentially slower jobs past ~10 chained pins — ×2.3 per
-    iteration with CONSTANT job count and constant row counts, i.e. the
-    per-job overhead itself doubles.  Neither ``localCheckpoint`` nor a
-    RELIABLE ``checkpoint(eager=True)`` stops the growth (both were
-    A/B'd: 0.5 s/iter → 80 s/iter by iteration 13), while a parquet
-    write+read is flat at 0.4 s/iter through 20+ iterations.  Loops
-    that reference their state ONCE per iteration (pagerank) don't
-    compound and don't need this.
-
-    The barrier is a distributed write+read (no driver traffic), so it
-    is exactly as scale-safe as any shuffle; insert one every ~6
-    supersteps in deep loops.  Files land in a per-session tempdir
-    (tiny label tables locally; at cluster scale this would point at
-    the job's scratch space, the same place reliable checkpoints go).
+    The coalesce merges the partitions that union states (Luby's merged
+    frame) would otherwise compound round over round.  Size ``w`` with
+    :func:`_width` where the loop knows its rows, so past the floor it
+    never narrows a wide stage.  ``eager=False`` when the caller's next
+    action (a count) materializes the pin in the same job.
     """
-    import os
-    import tempfile
-    import uuid
-
-    spark = df.sparkSession
-    app = spark.sparkContext.applicationId
-    with _BARRIER_LOCK:
-        base = _BARRIER_DIRS.get(app)
-        if base is None:
-            base = _BARRIER_DIRS[app] = tempfile.mkdtemp(prefix="cyber_etl_barrier_")
-            atexit.register(shutil.rmtree, base, ignore_errors=True)
-    path = os.path.join(base, uuid.uuid4().hex[:12])
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    p = df.coalesce(w).localCheckpoint(eager=eager)
+    spark = p.sparkSession
+    # p's plan is the LogicalRDD over the checkpointed RDD: wrap that RDD
+    # itself, so reads of the new frame plan nothing above it
+    jdf = spark._jsparkSession.internalCreateDataFrame(
+        p._jdf.logicalPlan().rdd(), p._jdf.schema(), False
+    )
+    return DataFrame(jdf, spark)
 
 
 def _pin_counted(df: DataFrame, **stats) -> tuple[DataFrame, dict]:
@@ -299,9 +285,7 @@ def _vertices(edges: DataFrame) -> tuple[DataFrame, int]:
     return _derived(edges, ("vertices",), build)
 
 
-def connected_components(
-    edges: DataFrame, max_iterations: int = 40, barrier_every: int = 6
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iterations: int = 40) -> DataFrame:
     """Min-label propagation connected components → (id, component).
 
     ``component`` is the smallest vertex id reachable from ``id`` —
@@ -309,11 +293,10 @@ def connected_components(
     pipeline (SURVEY.md M2: blocking → scoring → connected components).
     Converges in O(diameter) supersteps (pointer jumping compresses
     that to ~O(log diameter)); each superstep is one join +
-    min-aggregation.  Every ``barrier_every`` supersteps the label
-    frame goes through :func:`_plan_barrier` — without it, loops that
-    reference their state more than once per iteration develop
-    exponentially slower jobs past ~10 chained pins (measured on q405's
-    high-diameter forest; see the barrier docstring).
+    min-aggregation.  Every superstep's label frame is pinned through
+    :func:`_pin`: the state joins itself (hook, then pointer jumping),
+    and a plain checkpoint chain would compound its inherited size
+    estimate into exponential planning past ~14 supersteps.
     """
     e = _sym(edges)
     vertices, n_nodes = _vertices(edges)
@@ -368,16 +351,14 @@ def connected_components(
                     F.coalesce(F.col("y.component"), F.col("x.component")),
                 ).alias("component"),
             )
-            .localCheckpoint(eager=False)
         )
-        if (it + 1) % barrier_every == 0:
-            new_labels = _plan_barrier(new_labels)
+        new_labels = _pin(new_labels, w, eager=False)
         # LAZY pin + observed count: the count is the one action that
-        # materializes the superstep's checkpoint (or first-reads the
-        # barrier scan), and the convergence sum rides it as a
-        # CollectMetrics observation — one job per superstep where the
-        # eager pin + agg-collect pair cost three (r13; the luby
-        # count-materializes-pin form with the metric folded in).
+        # materializes the superstep's checkpoint, and the convergence
+        # sum rides it as a CollectMetrics observation — one job per
+        # superstep where the eager pin + agg-collect pair cost three
+        # (r13; the luby count-materializes-pin form with the metric
+        # folded in).
         obs = Observation()
         new_labels.observe(
             obs, F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
@@ -396,7 +377,6 @@ def pagerank(
     iterations: int = 10,
     damping: float = 0.85,
     variant: str = "pagerank",
-    checkpoint_interval: int = 5,
     weight_col: str | None = None,
     seeds: list | None = None,
 ) -> DataFrame:
@@ -533,18 +513,16 @@ def pagerank(
             # job that makes the next broadcast (and any multi-reference
             # caller) read a flat checkpoint instead of a chain.
             ranks = _compact(ranks, n).localCheckpoint(eager=True)
-        # big-vector path: truncate lineage periodically, not per-
+        # big-vector path: truncate lineage every 5 supersteps, not per
         # superstep (each eager checkpoint of a large vector is a real
         # blocking job; a few chained shuffle-join supersteps plan fine
         # and run as ONE job).
-        elif (i + 1) % checkpoint_interval == 0 and (i + 1) < iterations:
+        elif (i + 1) % 5 == 0 and (i + 1) < iterations:
             ranks = _compact(ranks, n).localCheckpoint(eager=True)
     return ranks
 
 
-def label_propagation(
-    edges: DataFrame, iterations: int = 4, checkpoint_interval: int = 4
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iterations: int = 4) -> DataFrame:
     """Synchronous label propagation → (id, community).
 
     Deterministic variant of GDS Louvain/LPA community detection (writeup
@@ -589,7 +567,8 @@ def label_propagation(
             # any multi-reference caller, e.g. modularity) reads a flat
             # plan.
             labels = labels.localCheckpoint(eager=True)
-        elif (i + 1) % checkpoint_interval == 0 and (i + 1) < iterations:
+        elif (i + 1) % 4 == 0 and (i + 1) < iterations:
+            # past the cap: truncate lineage every 4 supersteps
             labels = labels.localCheckpoint(eager=True)
     return labels
 
@@ -1218,9 +1197,7 @@ def sssp_hop_limited(
     return dist
 
 
-def hits(
-    edges: DataFrame, iterations: int = 5, checkpoint_each: bool = True
-) -> tuple[DataFrame, DataFrame]:
+def hits(edges: DataFrame, iterations: int = 5) -> tuple[DataFrame, DataFrame]:
     """HITS (Kleinberg) hubs & authorities on a DIRECTED edge list →
     ((src id, hub), (dst id, auth)).
 
@@ -1270,8 +1247,7 @@ def hits(
     bc_h = (lambda d: F.broadcast(d)) if n_src <= _BCAST_MAX_ROWS else (lambda d: d)
     bc_a = (lambda d: F.broadcast(d)) if n_dst <= _BCAST_MAX_ROWS else (lambda d: d)
     hubs = e.select("src").distinct().withColumn("h", F.lit(1.0))
-    if checkpoint_each:
-        hubs = _compact(hubs, n_src).localCheckpoint(eager=True)
+    hubs = _compact(hubs, n_src).localCheckpoint(eager=True)
     a_raw = None
     # hinted-broadcast joins + aggs only: the AQE-off loop class
     # (see _aqe_off)
@@ -1286,8 +1262,7 @@ def hits(
         hubs = _nw(
             e.join(bc_a(a_raw), "dst").groupBy("src").agg(F.sum("a").alias("h")), w
         )
-        if checkpoint_each:
-            hubs = _compact(hubs, n_src).localCheckpoint(eager=True)
+        hubs = _compact(hubs, n_src).localCheckpoint(eager=True)
     # single final normalization of each returned side (exact-cancel
     # argument above).  auths derives from the PINNED penultimate hub
     # vector, so consuming it never re-runs the loop.
@@ -1417,9 +1392,7 @@ def betweenness_sampled(
     return out
 
 
-def eigenvector_centrality(
-    edges: DataFrame, iterations: int = 6, checkpoint_each: bool = True
-) -> DataFrame:
+def eigenvector_centrality(edges: DataFrame, iterations: int = 6) -> DataFrame:
     """Eigenvector centrality (power iteration, GDS
     ``gds.eigenvector``) on a SYMMETRIC edge list → (id, score):
     x_{t+1} = normalize_L2(A · x_t), x_0 = 1.
@@ -1448,8 +1421,7 @@ def eigenvector_centrality(
     w = _width(m)
     bc = (lambda d: F.broadcast(d)) if n <= _BCAST_MAX_ROWS else (lambda d: d)
     x = e.select("src").distinct().withColumn("score", F.lit(1.0))
-    if checkpoint_each:
-        x = _compact(x, n).localCheckpoint(eager=True)
+    x = _compact(x, n).localCheckpoint(eager=True)
     # hinted-broadcast join + agg only: the AQE-off loop class
     with _aqe_off(e.sparkSession, n <= _BCAST_MAX_ROWS):
       for i in range(iterations):
@@ -1459,8 +1431,7 @@ def eigenvector_centrality(
             .agg(F.sum("score").alias("score")),
             w,
         ).withColumnRenamed("dst", "src")
-        if checkpoint_each:
-            x = _compact(x, n).localCheckpoint(eager=True)
+        x = _compact(x, n).localCheckpoint(eager=True)
     nrm = x.agg(F.sqrt(F.sum(F.col("score") * F.col("score"))).alias("nrm"))
     return x.crossJoin(F.broadcast(nrm)).select(
         F.col("src").alias("id"), (F.col("score") / F.col("nrm")).alias("score")
@@ -1485,11 +1456,11 @@ def luby_mis(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
 
     Scale contract: each round is two semi-joins + one anti-join over
     the SHRINKING undecided edge set; node state, edge state AND the
-    round's winners ride ONE union frame whose per-round pin is LAZY
-    and materialized by the early-exit count — one job per round (two
-    on plan-barrier rounds; the barrier every 2 rounds is the
-    _plan_barrier finding — the undecided tables are referenced
-    multiple times per round)."""
+    round's winners ride ONE union frame whose per-round pin
+    (:func:`_pin`) is LAZY and materialized by the early-exit count —
+    one job per round.  The pin drops the size estimate the self-
+    referencing state would otherwise compound, and its coalesce keeps
+    the union's partitions from multiplying round over round."""
     pr = (
         "CAST(conv(substr(md5('mis:' || CAST({n} AS STRING)), 1, 13),"
         " 16, 10) AS BIGINT)"
@@ -1566,6 +1537,7 @@ def luby_mis(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
     # AQE stage jobs) disappear.  Past the cap the distinct+shuffle plan
     # is exactly the old one.
     n0 = state.count()
+    w = _width(n0)
     bcast = n0 <= _BCAST_MAX_ROWS // 2
     bc = (lambda d: F.broadcast(d)) if bcast else (lambda d: d)
     n_und = n0  # nodes exist iff state is non-empty (every edge has ends)
@@ -1614,10 +1586,7 @@ def luby_mis(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
         merged = _merge(
             nxt_nodes, nxt_edges, winners.select("n", F.lit(k).alias("round"))
         )
-        if k % 2 == 0:
-            state = _plan_barrier(merged)
-        else:
-            state = merged.localCheckpoint(eager=False)
+        state = _pin(merged, w, eager=False)
         und_nodes, und_edges = _split(state)
         n_und = und_nodes.count()  # one job: materializes the round's pin
         mis_frames.append(

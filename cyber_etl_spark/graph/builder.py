@@ -88,4 +88,7 @@ def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges._cyber_symmetric = True  # mirror union emits both directions
     edges._cyber_rows = 2 * st_upper["n"]  # the mirror rows are disjoint (src < dst)
+    # the pinned src < dst half: one-orientation consumers read it instead
+    # of scanning the mirror only to filter it away
+    edges._cyber_upper = upper
     return edges

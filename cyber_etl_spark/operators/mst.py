@@ -25,22 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..graph.algorithms import _pin, _width
 from .quantiles import _local_values_df
-
-
-def _pin(df: DataFrame, w: int = 8, eager: bool = True) -> DataFrame:
-    """Checkpoint a loop-state table, first collapsing its stage-terminal
-    shuffle to ``w`` reduce tasks (the graph/algorithms._nw rule: pin
-    jobs bypass AQE, so a 1000-row pointer table would otherwise run 32
-    near-empty reduce tasks per superstep; when the exchange already has
-    fewer partitions than ``w`` the coalesce is a no-op, so
-    cluster-scale width is untouched).  Measured a wash at sf0.1 (the
-    loop is job-floor-bound, ~7 jobs/round), kept for the reduce-task
-    floor it removes on wider sessions.  ``eager=False`` when the caller
-    immediately counts the result — the count is then the action that
-    materializes the pin, one job instead of two (the bfs_distances r12
-    pattern)."""
-    return df.coalesce(w).localCheckpoint(eager=eager)
 
 
 def _contract(
@@ -55,15 +41,16 @@ def _contract(
     union-find parent map over tail component ids (callers compose
     these into a forest — :func:`boruvka_msf` — or a component labeling
     — :func:`boruvka_components`)."""
-    spark = edges.sparkSession
     nodes = (
         edges.select(F.col("src").alias("n"))
         .unionAll(edges.select(F.col("dst").alias("n")))
         .distinct()
     )
-    comp = _pin(nodes.select("n", F.col("n").alias("c")), eager=False)
+    # every state pin goes through graph/algorithms._pin: each round
+    # chains ~4 pins that reference their predecessors more than once,
+    # and the pin drops the size estimate that chain would compound
+    comp = _pin(nodes.select("n", F.col("n").alias("c")), 8, eager=False)
     selected: list[DataFrame] = []
-    rounds_done = 0
     # Upper bound on the number of components that still carry a CROSSING
     # edge.  The driver tail's C(tail_cap, 2) contract only involves such
     # components (rem keeps ca != cb rows only), so the loop may hand off
@@ -75,6 +62,7 @@ def _contract(
     # contraction (r12 optimization; forest/partition output is invariant
     # to WHEN the handoff happens — both paths compute the unique MSF).
     n_active_bound = comp.count()
+    w = _width(n_active_bound)
     # crossing-edge table of the CURRENT comp, when one is already pinned
     # (mid-loop handoff) — the tail reuses it instead of re-running the
     # two comp joins
@@ -86,13 +74,15 @@ def _contract(
         ca = comp.select(F.col("n").alias("src"), F.col("c").alias("ca"))
         cb = comp.select(F.col("n").alias("dst"), F.col("c").alias("cb"))
         e2 = _pin(
-            edges.join(ca, "src").join(cb, "dst").where(F.col("ca") != F.col("cb"))
+            edges.join(ca, "src").join(cb, "dst").where(F.col("ca") != F.col("cb")),
+            w,
+            eager=True,
         )
         st = F.struct("d", "src", "dst", "ca", "cb").alias("e")
         cand = e2.select(F.col("ca").alias("c"), st).unionAll(
             e2.select(F.col("cb").alias("c"), st)
         )
-        mine = _pin(cand.groupBy("c").agg(F.min("e").alias("e")), eager=False)
+        mine = _pin(cand.groupBy("c").agg(F.min("e").alias("e")), w, eager=False)
         cross = e2
         n_active = mine.count()  # post-pin count: partition-size sum only
         if n_active <= tail_cap:
@@ -120,7 +110,9 @@ def _contract(
                 )
                 .otherwise(F.col("a.p"))
                 .alias("p"),
-            )
+            ),
+            w,
+            eager=True,
         )
         while True:
             x, y = cur.alias("x"), cur.alias("y")
@@ -135,27 +127,22 @@ def _contract(
                 x.join(y, F.col("x.p") == F.col("y.c"), "left").select(
                     F.col("x.c").alias("c"),
                     F.coalesce(F.col("y.p"), F.col("x.p")).alias("p"),
-                )
+                ),
+                w,
+                eager=True,
             )
         lbl = cur.select(F.col("c").alias("_old"), F.col("p").alias("_new"))
         comp = _pin(
             comp.join(lbl, comp.c == F.col("_old"), "left").select(
                 "n", F.coalesce(F.col("_new"), F.col("c")).alias("c")
-            )
+            ),
+            w,
+            eager=True,
         )
         cross = None  # comp changed — the pinned crossing table is stale
         # each active component merged with at least one other this
         # round, so the next round's active count is at most half
         n_active_bound = n_active // 2
-        rounds_done += 1
-        if rounds_done % 2 == 0:
-            # each round chains ~4 pins that reference their predecessors
-            # multiple times — sever the plan before the chain reaches
-            # the ~10-level exponential-job-cost wall (_plan_barrier's
-            # measured finding)
-            from ..graph.algorithms import _plan_barrier
-
-            comp = _plan_barrier(comp)
     else:
         raise RuntimeError(
             f"boruvka_msf: component count still above tail_cap={tail_cap} "
@@ -229,9 +216,9 @@ def boruvka_msf(
     pointer doubling until stable (checked per jump — chains of
     strictly-decreasing min-edge weights can be long in adversarial
     inputs, so the jump count is convergence-driven, not fixed).
-    Superstep state (comp, pointer tables) is checkpointed every round
-    — the force-broadcast/loop pin rule — with a full plan barrier
-    every 2 rounds (the _plan_barrier exponential-chain finding).
+    Superstep state (comp, pointer tables) is pinned every round
+    through graph/algorithms._pin, which also drops the size estimate
+    the self-referencing chain would otherwise compound.
     """
     spark = edges.sparkSession
     _, selected, picked, _ = _contract(edges, tail_cap, max_rounds)

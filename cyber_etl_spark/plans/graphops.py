@@ -635,7 +635,7 @@ def _sparse_upper_edges_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.quantiles import histogram_quantiles
 
     def build():
-        w = co_supply_edges_weighted(spark, sf_dir).where(F.col("src") < F.col("dst"))
+        w = co_supply_edges_weighted(spark, sf_dir)._cyber_upper
         q99 = histogram_quantiles(w, "weight", {"q99": 0.95})["q99"]
         # no edges: a NULL threshold keeps no row, as `w >= NULL` does
         return (
@@ -2288,9 +2288,7 @@ def q406_incremental_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.mst import boruvka_msf
     from ..operators.quantiles import histogram_quantiles
 
-    wedges = co_supply_edges_weighted(spark, sf_dir).where(
-        F.col("src") < F.col("dst")
-    )
+    wedges = co_supply_edges_weighted(spark, sf_dir)._cyber_upper
     # integer weights with few distinct values: the histogram's literals
     qs = histogram_quantiles(wedges, "weight", {"p90": 0.90, "p95": 0.95})
     delta = (
@@ -2424,8 +2422,8 @@ def q412_luby_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale plan: O(log n) supersteps (Luby 1986 — a constant expected
     fraction of undecided edges dies per round), each two semi-joins +
-    an anti-join over the SHRINKING undecided subgraph, with the
-    _plan_barrier discipline every 2 rounds.  The oracle replays the
+    an anti-join over the SHRINKING undecided subgraph, its state
+    pinned every round (graph/algorithms._pin).  The oracle replays the
     rounds as a recursive CTE over dense status/round lists (the q404
     machinery) and was validated against an independent adjacency-dict
     Python implementation at all three scales.  Set invariants

@@ -107,27 +107,38 @@ def test_aqe_off_overlapping_threads_restore_setting(spark):
     assert spark.conf.get(key) == "true"
 
 
-def test_barrier_dir_removed_at_exit(spark, monkeypatch):
-    """_plan_barrier creates one temp dir per application and registers
-    its removal at interpreter exit."""
-    import os
+def test_chained_pins_drop_inherited_size_estimate(spark):
+    """24 chained supersteps of a self-joining state pinned through
+    ``_pin``: every pinned frame's size estimate stays a plain Long (a
+    checkpoint chain multiplies two inherited estimates per superstep,
+    so the estimate's digit count doubles), and the rows equal the
+    recurrence replayed on the driver.  The state is a permutation
+    squared by a self-join each superstep (p <- p∘p), which never
+    converges, so every superstep moves every row."""
+    import random
 
-    from cyber_etl_spark.graph import algorithms
+    from cyber_etl_spark.graph.algorithms import _pin
 
-    registered = []
-    monkeypatch.setattr(
-        algorithms.atexit, "register", lambda fn, *a, **kw: registered.append((fn, a, kw))
-    )
-    monkeypatch.setattr(algorithms, "_BARRIER_DIRS", {})
-    df = spark.range(3)
-    assert sorted(r.id for r in algorithms._plan_barrier(df).collect()) == [0, 1, 2]
-    algorithms._plan_barrier(df)
-    (base,) = algorithms._BARRIER_DIRS.values()
-    assert len(os.listdir(base)) == 2  # both barriers share the one dir
-    assert len(registered) == 1
-    fn, args, kwargs = registered[0]
-    fn(*args, **kwargs)
-    assert not os.path.exists(base)
+    n, steps = 200, 24
+    perm = list(range(n))
+    random.Random(7).shuffle(perm)
+    state = spark.createDataFrame(list(enumerate(perm)), "id long, p long")
+    expected = perm
+    for _ in range(steps):
+        x, y = state.alias("x"), state.alias("y")
+        state = _pin(
+            x.join(y, F.col("x.p") == F.col("y.id")).select(
+                F.col("x.id").alias("id"), F.col("y.p").alias("p")
+            ),
+            8,
+            eager=False,
+        )
+        assert state.count() == n
+        stats = state._jdf.queryExecution().optimizedPlan().stats()
+        assert int(stats.sizeInBytes()) < 2**63
+        expected = [expected[expected[i]] for i in range(n)]
+    assert sorted(map(tuple, state.collect())) == list(enumerate(expected))
+    assert expected != perm  # the squarings moved the rows
 
 
 def test_rank_loop_without_forced_broadcast(spark, monkeypatch):
@@ -375,11 +386,15 @@ def test_kcore_sssp_warm_call_is_one_task(spark):
         assert [tracker.getStageInfo(st).numTasks for st in stages] == [1], name
 
 
-@pytest.mark.parametrize("name", ["q128_kcore", "q129_sssp"])
+@pytest.mark.parametrize(
+    "name", ["q128_kcore", "q129_sssp", "q27_dedup_clusters", "q412_luby_mis"]
+)
 def test_kcore_sssp_past_cap_match_oracle(spark, sf_correct, monkeypatch, name):
     """Past ``_BCAST_MAX_ROWS`` k-core semi-joins the active set without
-    a broadcast hint and SSSP joins its distance vector to the exchanged
-    edge side: both plans must still match the DuckDB oracle."""
+    a broadcast hint, SSSP joins its distance vector to the exchanged
+    edge side, and CC and Luby MIS join their pinned state without
+    broadcast hints (Luby also keeps its pre-join distincts): every plan
+    must still match the DuckDB oracle."""
     from cyber_etl_spark.graph import algorithms
     from cyber_etl_spark.testing import compare_query
 
