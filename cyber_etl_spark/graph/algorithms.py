@@ -26,6 +26,8 @@ import threading
 import weakref
 from contextlib import contextmanager
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -128,36 +130,31 @@ def _derived(edges: DataFrame, tag: tuple, build) -> DataFrame:
     return slot[tag]
 
 
-def _one_task(edges: DataFrame, schema: str, kernel) -> DataFrame:
-    """Run ``kernel(pdf) -> pdf`` once over the whole of ``edges`` in ONE
-    ``mapInPandas`` task over the coalesced frame — the local path of a
-    loop whose edge list is at or under ``_BCAST_MAX_ROWS``.
+def _on_driver(df: DataFrame, rows: int) -> dict:
+    """``{column: ndarray}`` copy of the pinned frame ``df`` on the driver,
+    collected through Arrow once and memoized with the frame — the local
+    path of a loop whose edge list is at or under ``_BCAST_MAX_ROWS``.
 
     Under the cap every superstep would broadcast the whole edge list to
-    every task anyway; one task holding it runs the loop without a
-    scheduled stage, an AQE re-plan or a pin per superstep (the textrank
-    rule: bounded iteration state must not loop as distributed
-    supersteps).  No input yields a typed empty frame; input above the
-    cap is refused rather than risking a single-task OOM.
+    every task anyway; one driver copy runs the loop with no job, no
+    Python worker and no Arrow round trip per call (the textrank rule:
+    bounded iteration state must not loop as distributed supersteps).
+    ``rows`` is the frame's known row count: past the cap the frame is
+    refused before anything is collected.  A frame marked
+    ``_cyber_base`` is a projection of that pinned frame and reads its
+    copy, so projections of one artifact share one collect.  Callers
+    return their result as ``createDataFrame`` of a pandas frame: with
+    Arrow on that is a local relation, read with no job and no worker.
     """
-    import pandas as pd
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    cap = _BCAST_MAX_ROWS
-    empty = to_arrow_schema(StructType.fromDDL(schema)).empty_table().to_pandas()
-
-    def run(batches):
-        chunks = [b for b in batches if len(b)]
-        rows = sum(len(b) for b in chunks)
-        if rows > cap:
-            raise ValueError(
-                f"{rows} edge rows exceed the one-task cap ({cap}); "
-                "past it the loop must run distributed"
-            )
-        yield kernel(pd.concat(chunks, ignore_index=True)) if chunks else empty
-
-    return edges.coalesce(1).mapInPandas(run, schema)
+    if rows > _BCAST_MAX_ROWS:
+        raise ValueError(
+            f"{rows} edge rows exceed the driver-copy cap ({_BCAST_MAX_ROWS}); "
+            "past it the loop must run distributed"
+        )
+    df = getattr(df, "_cyber_base", df)
+    return _derived(
+        df, ("driver",), lambda: {c: s.to_numpy() for c, s in df.toPandas().items()}
+    )
 
 
 def _compact(df: DataFrame, rows_hint: int, rows_per_part: int = 200_000) -> DataFrame:
@@ -917,45 +914,45 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 4) -> DataFrame:
     of them) the survivors and their in-core degrees are returned.
     Vertices left without an in-core edge are absent.
 
-    At or under ``_BCAST_MAX_ROWS`` edges the whole peel runs in one task
-    (:func:`_one_task`): ``np.unique`` indexes the vertices and one
+    At or under ``_BCAST_MAX_ROWS`` edges the whole peel runs on the
+    driver over the memoized copy of the pinned edge list
+    (:func:`_on_driver`): ``np.unique`` indexes the vertices and one
     ``np.bincount`` per round gives the in-core degrees — integer counts,
     exact by construction.  Past the cap one round = two semi-joins of
     the (pinned) edge list against the active set + a src-keyed count;
     the active set only shrinks and is checkpointed per round per the
     loop-state discipline, and the edge side never re-shuffles.
     """
-    e = _sym(edges)
     m = _ecount(edges)
     if m <= _BCAST_MAX_ROWS:
+        # a symmetric-marked frame's rows ARE its _sym rows: read its copy
+        sym = edges if getattr(edges, "_cyber_symmetric", False) else _sym(edges)
+        cols = _on_driver(sym, m)
+        s, d = np.asarray(cols["src"], "int64"), np.asarray(cols["dst"], "int64")
+        ids, inv = np.unique(np.concatenate([s, d]), return_inverse=True)
+        s, d = inv[: len(s)], inv[len(s) :]
+        act = np.zeros(len(ids), bool)
+        act[s] = True  # round 0: every vertex
 
-        def peel(pdf):
-            import numpy as np
-            import pandas as pd
+        def local_deg(a):
+            live = a[s] & a[d]
+            return np.bincount(s[live], minlength=len(ids))
 
-            s, d = pdf["src"].to_numpy("int64"), pdf["dst"].to_numpy("int64")
-            ids, inv = np.unique(np.concatenate([s, d]), return_inverse=True)
-            s, d = inv[: len(s)], inv[len(s) :]
-            act = np.zeros(len(ids), bool)
-            act[s] = True  # round 0: every vertex
+        for _ in range(rounds):
+            deg = local_deg(act)
+            nxt = (deg > 0) & (deg >= k)
+            stable = nxt.sum() == act.sum()  # fixpoint — further rounds are no-ops
+            act = nxt
+            if stable or not act.any():
+                break
+        deg = local_deg(act)
+        keep = deg > 0
+        return edges.sparkSession.createDataFrame(
+            pd.DataFrame({"id": ids[keep], "core_deg": deg[keep]}),
+            "id bigint, core_deg bigint",
+        )
 
-            def in_core_deg(a):
-                live = a[s] & a[d]
-                return np.bincount(s[live], minlength=len(ids))
-
-            for _ in range(rounds):
-                deg = in_core_deg(act)
-                nxt = (deg > 0) & (deg >= k)
-                stable = nxt.sum() == act.sum()  # fixpoint — further rounds are no-ops
-                act = nxt
-                if stable or not act.any():
-                    break
-            deg = in_core_deg(act)
-            keep = deg > 0
-            return pd.DataFrame({"id": ids[keep], "core_deg": deg[keep]})
-
-        return _one_task(e, "id bigint, core_deg bigint", peel)
-
+    e = _sym(edges)
     active, n = _vertices(edges)  # round 0: every vertex
     w = _width(m)
 
@@ -1132,51 +1129,48 @@ def sssp_hop_limited(
 
     The edges are pinned and counted once per edge frame — not at all
     when the frame's builder pinned it and recorded ``_cyber_rows``.  At
-    or under ``_BCAST_MAX_ROWS`` rows every hop runs in one task
-    (:func:`_one_task`): one ``np.minimum.at`` per hop relaxes all edges
-    out of the previous distance vector.  Past the cap the supersteps
-    unroll into ONE lazy plan that reads each distance vector once: a
-    zero-weight self-loop per vertex brings its own distance back
-    through the relaxation join, the source's 0 is re-offered as a
-    one-row constant, the edge exchange is reused by every superstep and
-    the vector leaves each aggregation hash-partitioned by ``id``.
+    or under ``_BCAST_MAX_ROWS`` rows every hop runs on the driver over
+    the memoized copy of the pinned edges (:func:`_on_driver`): one
+    ``np.minimum.at`` per hop relaxes all edges out of the previous
+    distance vector.  Past the cap the supersteps unroll into ONE lazy
+    plan that reads each distance vector once: a zero-weight self-loop
+    per vertex brings its own distance back through the relaxation
+    join, the source's 0 is re-offered as a one-row constant, the edge
+    exchange is reused by every superstep and the vector leaves each
+    aggregation hash-partitioned by ``id``.
     """
     spark = wedges.sparkSession
 
     def build():
-        e = wedges.select("src", "dst", F.col("weight").cast("long").alias("w"))
         rows = getattr(wedges, "_cyber_rows", None)
         if rows is not None:  # pinned and counted by its builder
-            return e, rows
-        e = e.localCheckpoint(eager=False)
+            return wedges, rows
+        e = wedges.select("src", "dst", "weight").localCheckpoint(eager=False)
         rows = e.count()  # the action that materializes the pin
         return _compact(e, rows), rows
 
-    e, rows = _derived(wedges, ("sssp_edges",), build)
+    base, rows = _derived(wedges, ("sssp_edges",), build)
     if rows == 0:
         return _local_values_df(spark, [], "id bigint, dist bigint")
     if rows <= _BCAST_MAX_ROWS:
+        cols = _on_driver(base, rows)
+        s, d, w = (np.asarray(cols[c], "int64") for c in ("src", "dst", "weight"))
+        ids, inv = np.unique(np.concatenate([s, d, [source]]), return_inverse=True)
+        s, d = inv[: len(s)], inv[len(s) : -1]
+        unreached = np.iinfo("int64").max
+        dist = np.full(len(ids), unreached)
+        dist[inv[-1]] = 0  # the source
+        for _ in range(iterations):
+            out = dist[s] != unreached
+            nxt = dist.copy()
+            np.minimum.at(nxt, d[out], dist[s[out]] + w[out])
+            dist = nxt
+        keep = dist != unreached
+        return spark.createDataFrame(
+            pd.DataFrame({"id": ids[keep], "dist": dist[keep]}), "id bigint, dist bigint"
+        )
 
-        def relax(pdf):
-            import numpy as np
-            import pandas as pd
-
-            s, d = pdf["src"].to_numpy("int64"), pdf["dst"].to_numpy("int64")
-            w = pdf["w"].to_numpy("int64")
-            ids, inv = np.unique(np.concatenate([s, d, [source]]), return_inverse=True)
-            s, d = inv[: len(s)], inv[len(s) : -1]
-            unreached = np.iinfo("int64").max
-            dist = np.full(len(ids), unreached)
-            dist[inv[-1]] = 0  # the source
-            for _ in range(iterations):
-                out = dist[s] != unreached
-                nxt = dist.copy()
-                np.minimum.at(nxt, d[out], dist[s[out]] + w[out])
-                dist = nxt
-            keep = dist != unreached
-            return pd.DataFrame({"id": ids[keep], "dist": dist[keep]})
-
-        return _one_task(e, "id bigint, dist bigint", relax)
+    e = base.select("src", "dst", F.col("weight").cast("long").alias("w"))
 
     def build_loops():
         v = e.select("src").union(e.select("dst")).distinct()
@@ -1612,4 +1606,5 @@ def luby_mis(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
     out = mis_frames[0]
     for f in mis_frames[1:]:
         out = out.unionAll(f)
-    return out.withColumnRenamed("n", "id")
+    # one read of w partitions, not w per round: the winners are few
+    return out.coalesce(w).withColumnRenamed("n", "id")

@@ -67,10 +67,16 @@ def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expansion plan references `sup` from multiple generator branches,
     # and without a checkpoint each branch re-runs the collect_set
     # aggregation over the fact table.  The max-degree statistic is
-    # observed in the pin's own job; AQE's coalescing sizes its
-    # partitions.
+    # observed in the pin's own job.  The sets aggregate to a few MB,
+    # which AQE would coalesce to 2 partitions — and the pair expansion
+    # (k²/2 rows per set) would run in 2 tasks.  Hash-partitioning the
+    # fact rows on the part key to the session's shuffle width instead
+    # satisfies the aggregation's distribution (no extra exchange), and
+    # a repartition to an explicit width is never coalesced: the pin and
+    # the expansion run at full width.
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     sup, st = _pin_counted(
-        li.groupBy(F.col("l_partkey").alias("p")).agg(
+        li.repartition(width, "l_partkey").groupBy(F.col("l_partkey").alias("p")).agg(
             F.sort_array(F.collect_set("l_suppkey")).alias("ss")
         ),
         max_deg=F.max(F.size("ss")),

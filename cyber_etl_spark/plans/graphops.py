@@ -667,13 +667,16 @@ def _sparse_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     A duplicate-free i<j list plus its mirror is symmetric and
     duplicate-free, so the frame is marked ``_cyber_symmetric`` (with
     its observed ``_cyber_rows``) and the graph loops' memoized
-    derivations key on this one object without re-counting it."""
+    derivations key on this one object without re-counting it.  It is
+    marked ``_cyber_base`` too: the driver-local k-core (q128) and SSSP
+    (q129) kernels share one collected copy of ``symw``."""
 
     def build():
         symw, _ = _sparse_sym_weighted(spark, sf_dir)
         sym = symw.select("src", "dst")
         sym._cyber_symmetric = True
         sym._cyber_rows = symw._cyber_rows
+        sym._cyber_base = symw
         return sym
 
     return artifact(spark, sf_dir, "sym", build)

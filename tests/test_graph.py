@@ -355,10 +355,11 @@ def test_kcore_sssp_local_equals_distributed(spark, monkeypatch):
     assert empty == ([], "struct<id:bigint,core_deg:bigint>")
 
 
-def test_kcore_sssp_warm_call_is_one_task(spark):
-    """Under the cap, once the memoized edge side and counts exist, a
-    warm call submits no job while it builds and its result runs as one
-    job of one task — the whole loop in a single kernel."""
+def test_kcore_sssp_warm_call_runs_no_job(spark):
+    """Under the cap, once the memoized driver copy of the edges exists,
+    a warm call submits no job while it builds, its result's collect
+    submits none either, and its executed plan holds no Python node —
+    the whole loop ran on the driver."""
     from cyber_etl_spark.graph.algorithms import kcore, sssp_hop_limited
 
     edges, wedges = _random_graph(spark, seed=3)
@@ -367,7 +368,7 @@ def test_kcore_sssp_warm_call_is_one_task(spark):
         "sssp": lambda: sssp_hop_limited(wedges, 0, iterations=6),
     }
     for make in calls.values():
-        make().collect()  # derives the pinned edge side and its counts
+        make().collect()  # derives the pinned edge side, its count and copy
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     for name, make in calls.items():
@@ -376,14 +377,36 @@ def test_kcore_sssp_warm_call_is_one_task(spark):
             sc.setJobGroup(built, built)
             out = make()
             sc.setJobGroup(ran, ran)
-            out.collect()
+            rows = out.collect()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rows, name
         assert tracker.getJobIdsForGroup(built) == [], name
-        jobs = tracker.getJobIdsForGroup(ran)
-        assert len(jobs) == 1, name
-        stages = tracker.getJobInfo(jobs[0]).stageIds
-        assert [tracker.getStageInfo(st).numTasks for st in stages] == [1], name
+        assert tracker.getJobIdsForGroup(ran) == [], name
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        for node in ("MapInPandas", "ArrowEvalPython", "PythonUDF"):
+            assert node not in plan, (name, plan)
+
+
+def test_driver_copy_refuses_past_cap_before_collect(spark, monkeypatch):
+    """An edge frame whose known row count exceeds the cap is refused
+    from that count alone: no collect job is submitted."""
+    from cyber_etl_spark.graph import algorithms
+
+    path = [(0, 1), (1, 0), (1, 2), (2, 1)]
+    edges = spark.createDataFrame(path, "src long, dst long")
+    edges._cyber_symmetric = True  # its builder pinned and counted it
+    edges._cyber_rows = len(path)
+    monkeypatch.setattr(algorithms, "_BCAST_MAX_ROWS", len(path) - 1)
+    sc = spark.sparkContext
+    group = "driver-copy-past-cap"
+    try:
+        sc.setJobGroup(group, group)
+        with pytest.raises(ValueError, match="exceed"):
+            algorithms._on_driver(edges, algorithms._ecount(edges))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 @pytest.mark.parametrize(
