@@ -28,6 +28,7 @@ from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -155,6 +156,22 @@ def _on_driver(df: DataFrame, rows: int) -> dict:
     return _derived(
         df, ("driver",), lambda: {c: s.to_numpy() for c, s in df.toPandas().items()}
     )
+
+
+def _from_driver(spark, cols: dict) -> DataFrame:
+    """The inverse of :func:`_on_driver`: a frame over the driver arrays
+    ``cols`` (``{column: ndarray}``), with those arrays as its driver copy
+    and their length as its ``_cyber_rows`` — an artifact built on the
+    driver that a later driver-local loop reads with no collect.
+
+    The Arrow local relation is pinned lazily: building the frame
+    submits no job, and distributed consumers that iterate over it read
+    the checkpointed rows from the first action on, not a relation
+    re-shipped with every plan."""
+    df = spark.createDataFrame(pa.table(cols)).localCheckpoint(eager=False)
+    df._cyber_rows = len(next(iter(cols.values())))
+    _derived(df, ("driver",), lambda: cols)
+    return df
 
 
 def _compact(df: DataFrame, rows_hint: int, rows_per_part: int = 200_000) -> DataFrame:

@@ -9,6 +9,7 @@ dataflow, same arithmetic, so results match to 1e-6 rounding.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -630,11 +631,21 @@ def _sparse_upper_edges_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection of this one, so the threshold and the checkpoint run once
     per (session, dataset) regardless of which form consumers ask for.
     The weights are integer counts with few distinct values, so the
-    threshold comes from their histogram and filters as a literal."""
-    from ..graph.builder import co_supply_edges_weighted
-    from ..operators.quantiles import histogram_quantiles
+    threshold comes from their histogram and filters as a literal.
+    Under the cap the backbone is cut from the driver counts
+    (:func:`co_supply_counts`) by the same ``_interpolate`` formula over
+    the sorted weights, and keeps those arrays as its driver copy."""
+    from ..graph.algorithms import _from_driver
+    from ..graph.builder import co_supply_counts, co_supply_edges_weighted
+    from ..operators.quantiles import _interpolate, histogram_quantiles
 
     def build():
+        counts = co_supply_counts(spark, sf_dir)
+        if counts is not None:
+            wt = counts["weight"]
+            q99 = _interpolate(0.95, len(wt), np.sort(wt).astype("float64"))
+            keep = wt >= q99 if q99 is not None else wt < 0  # None: no pairs
+            return _from_driver(spark, {c: a[keep] for c, a in counts.items()})
         w = co_supply_edges_weighted(spark, sf_dir)._cyber_upper
         q99 = histogram_quantiles(w, "weight", {"q99": 0.95})["q99"]
         # no edges: a NULL threshold keeps no row, as `w >= NULL` does
@@ -819,11 +830,21 @@ def _sparse_sym_weighted(
     the substrate for weighted traversals (SSSP) and, projected, of
     :func:`_sparse_sym_edges`: :func:`_sparse_upper_edges_w` and its
     mirror pinned ONCE, with the backbone's lowest vertex id (None when
-    it is empty), cached per (session, dataset)."""
-    from ..graph.algorithms import _pin_counted
+    it is empty), cached per (session, dataset).  Under the cap it is
+    mirrored from ``w``'s driver arrays, which then are its own driver
+    copy: the driver-local k-core and SSSP run with no collect."""
+    from ..graph.algorithms import _from_driver, _on_driver, _pin_counted
+    from ..graph.builder import co_supply_counts
 
     def build():
         w = _sparse_upper_edges_w(spark, sf_dir)
+        if co_supply_counts(spark, sf_dir) is not None:
+            up = _on_driver(w, w._cyber_rows)  # w's own arrays: no collect
+            s, d, wt = up["src"], up["dst"], up["weight"]
+            symw = _from_driver(
+                spark, {"src": np.r_[s, d], "dst": np.r_[d, s], "weight": np.r_[wt, wt]}
+            )
+            return symw, (int(s.min()) if len(s) else None)  # s < d
         # the row count and the lowest vertex id are observed in the pin
         symw, st = _pin_counted(
             w.unionByName(

@@ -494,9 +494,12 @@ def fresh_store(monkeypatch):
 
 
 def test_backbone_cold_build_job_budget(spark, sf_correct, fresh_store):
-    """Cold, the co-supply backbone (weighted edges, P95 filter, one
-    symmetric pin) plus the first q128 and q129 calls submit at most 12
-    jobs: every statistic comes from a job that already runs."""
+    """Cold, the co-supply backbone plus the first q128 and q129 calls
+    submit 3 jobs: the one bounded lineitem collect the driver counts
+    come from, and the two queries' writes.  ``w`` and ``symw`` are
+    built from those arrays with no job, the driver-local loops read
+    ``symw``'s seeded copy with no collect, and neither ``weighted``
+    nor ``edges`` is built."""
     from cyber_etl_spark.plans import QUERIES
     from cyber_etl_spark.sources import read_table
 
@@ -512,9 +515,9 @@ def test_backbone_cold_build_job_budget(spark, sf_correct, fresh_store):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= 12, len(jobs)
+    assert len(jobs) <= 3, len(jobs)
     assert fresh_store.BUILD_COUNT == {
-        f"sf0.01:{a}": 1 for a in ("weighted", "w", "symw", "sym")
+        f"sf0.01:{a}": 1 for a in ("pairs", "w", "symw", "sym")
     }
 
 
@@ -533,6 +536,107 @@ def test_backbone_observed_stats_match_counts(spark, sf_correct, fresh_store):
     assert lo == symw.agg(F.min("src")).collect()[0][0]
     sym = _sparse_sym_edges(spark, sf_correct)
     assert _ecount(sym) == sym.count() == symw._cyber_rows
+
+
+def _hot_part_lineitem(tmp_path) -> str:
+    """A dataset directory holding a seeded lineitem-like table
+    (l_partkey, l_suppkey): 200 small parts with repeated (part,
+    supplier) rows, and one hot part supplied by 40 of the 50
+    suppliers, each of its rows twice."""
+    import random
+
+    import pandas as pd
+
+    rnd = random.Random(11)
+    rows = [(p, rnd.randrange(50)) for p in range(200) for _ in range(rnd.randint(1, 6))]
+    rows += [(999, s) for s in rnd.sample(range(50), 40) for _ in range(2)]
+    rnd.shuffle(rows)
+    pd.DataFrame(rows, columns=["l_partkey", "l_suppkey"]).to_parquet(
+        tmp_path / "lineitem.parquet"
+    )
+    return str(tmp_path)
+
+
+@pytest.mark.parametrize("data", ["sf0.01", "hot_part"])
+def test_driver_backbone_equals_distributed(spark, sf_correct, tmp_path, monkeypatch, data):
+    """Under the cap the co-supply pair counts, the P95 backbone ``w``,
+    its mirror ``symw`` and the lowest vertex id come from driver arrays;
+    past it (cap 0) from the distributed build.  Both agree row for row
+    — at sf0.01 and on a table whose hot part, with a chunk of 8, takes
+    the pair expansion's chunk-scatter path.  ``symw``'s seeded driver
+    copy holds its rows."""
+    from cyber_etl_spark import session
+    from cyber_etl_spark.graph import algorithms, builder
+    from cyber_etl_spark.plans.graphops import _sparse_sym_weighted, _sparse_upper_edges_w
+
+    sf = sf_correct if data == "sf0.01" else _hot_part_lineitem(tmp_path)
+    monkeypatch.setattr(builder, "_PAIR_CHUNK", 8)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    def build():
+        monkeypatch.setattr(session, "_ARTIFACTS", session.SessionMemo())
+        counts = builder.co_supply_counts(spark, sf)
+        upper = builder.co_supply_edges_weighted(spark, sf)._cyber_upper
+        symw, lo = _sparse_sym_weighted(spark, sf)
+        return counts, symw, (rows(upper), rows(_sparse_upper_edges_w(spark, sf)), rows(symw), lo)
+
+    counts, symw, local = build()
+    copy = algorithms._on_driver(symw, symw._cyber_rows)
+    assert sorted(zip(*(copy[c].tolist() for c in ("src", "dst", "weight")))) == local[2]
+    monkeypatch.setattr(algorithms, "_BCAST_MAX_ROWS", 0)
+    refused, _, distributed = build()
+    assert refused is None
+    assert local == distributed
+    upper, w, symw_rows, lo = local
+    assert list(zip(*(counts[c].tolist() for c in ("src", "dst", "weight")))) == upper
+    assert 0 < len(w) < len(upper) and len(symw_rows) == 2 * len(w)
+    assert lo == min(s for s, _, _ in w)
+    if data == "hot_part":
+        assert (50 * 49) // 2 >= len(upper) > (40 * 39) // 2  # the hot part's pairs and more
+
+
+def test_driver_counts_refused_past_either_bound(spark, sf_smoke, monkeypatch, fresh_store):
+    """Past either bound — more than cap lineitem rows, or more than cap
+    possible supplier pairs — the driver count refuses and the backbone
+    builds distributed; at the bound it is accepted.  No collect hands
+    the driver more than cap + 1 rows."""
+    from cyber_etl_spark.graph import algorithms, builder
+    from cyber_etl_spark.plans.graphops import _sparse_sym_weighted
+    from cyber_etl_spark.sources import read_table
+
+    li = read_table(spark, sf_smoke, "lineitem")
+    seen = []
+    to_arrow = type(li).toArrow
+
+    def spy(df):
+        tab = to_arrow(df)
+        seen.append((algorithms._BCAST_MAX_ROWS, tab.num_rows))
+        return tab
+
+    monkeypatch.setattr(type(li), "toArrow", spy)
+
+    def counts_at(cap, df):
+        monkeypatch.setattr(algorithms, "_BCAST_MAX_ROWS", cap)
+        return builder._driver_pair_counts(df)
+
+    # rows: 6000 lineitem rows over 10 suppliers (45 possible pairs)
+    assert counts_at(100, li) is None
+    assert counts_at(li.count(), li) is not None
+    # pairs: 30 rows over 30 suppliers (435 possible pairs)
+    star = spark.createDataFrame(
+        [(i % 3, i) for i in range(30)], "l_partkey long, l_suppkey long"
+    )
+    assert counts_at(434, star) is None
+    assert counts_at(435, star) is not None
+    assert seen[0] == (100, 101)
+    assert all(n <= cap + 1 for cap, n in seen)
+    # the backbone past the row bound: the distributed build
+    counts_at(100, li)
+    _sparse_sym_weighted(spark, sf_smoke)
+    assert {"sf0.001:pairs", "sf0.001:weighted"} <= set(fresh_store.BUILD_COUNT)
+    assert seen[-1] == (100, 101)
 
 
 def test_observation_after_eager_pin_returns(spark):
