@@ -680,7 +680,7 @@ def _sparse_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     its observed ``_cyber_rows``) and the graph loops' memoized
     derivations key on this one object without re-counting it.  It is
     marked ``_cyber_base`` too: the driver-local k-core (q128) and SSSP
-    (q129) kernels share one collected copy of ``symw``."""
+    (q129) kernels share ``symw``'s one driver copy."""
 
     def build():
         symw, _ = _sparse_sym_weighted(spark, sf_dir)

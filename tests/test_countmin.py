@@ -47,7 +47,7 @@ def test_cms_one_sided_bounds_and_partitioning(spark):
 
 def test_cms_stream_snapshot_equals_batch_sketch(spark, tmp_path):
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from cyber_etl_spark.streaming import read_event_stream, run_stream_to_memory
     from cyber_etl_spark.streaming.stateful import cms_stream
@@ -65,7 +65,7 @@ def test_cms_stream_snapshot_equals_batch_sketch(spark, tmp_path):
     d.mkdir()
     for i in range(3):
         chunk = pdf.iloc[i * 300 : (i + 1) * 300]
-        pq.write_table(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
+        write_feed(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
     stream = read_event_stream(spark, str(d), empty_dir_ts="micros").select(
         F.col("event_type").alias("item")
     )

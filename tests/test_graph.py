@@ -16,8 +16,8 @@ def _toy_edges(spark):
 
 @pytest.fixture(params=["under_cap", "past_cap"])
 def cap_side(request, monkeypatch):
-    """Both sides of ``_BCAST_MAX_ROWS``: k-core and SSSP run as one-task
-    kernels at or under it and as distributed loops past it (cap 0)."""
+    """Both sides of ``_BCAST_MAX_ROWS``: k-core and SSSP run on the
+    driver at or under it and as distributed loops past it (cap 0)."""
     from cyber_etl_spark.graph import algorithms
 
     if request.param == "past_cap":
@@ -321,7 +321,7 @@ def _random_graph(spark, seed: int, n: int = 40, m: int = 80):
 
 
 def test_kcore_sssp_local_equals_distributed(spark, monkeypatch):
-    """The one-task kernels and the distributed loops are two plans for
+    """The driver-local loops and the distributed loops are two plans for
     one computation: on a seeded random graph they must agree row for
     row, for every k, round count, hop count and an outside source."""
     from cyber_etl_spark.graph import algorithms

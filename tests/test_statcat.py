@@ -271,7 +271,7 @@ def test_kmv_stream_snapshot_equals_batch_sketch(spark, tmp_path):
     union slicing-independence that makes the catalog streaming-
     maintainable)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from cyber_etl_spark.operators.statcat import key_sketches
     from cyber_etl_spark.streaming import read_event_stream, run_stream_to_memory
@@ -294,7 +294,7 @@ def test_kmv_stream_snapshot_equals_batch_sketch(spark, tmp_path):
     d.mkdir()
     for i in range(3):
         chunk = pdf.iloc[i * 300 : (i + 1) * 300]
-        pq.write_table(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
+        write_feed(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
     stream = read_event_stream(spark, str(d), empty_dir_ts="micros").select(
         F.lit("t.k").alias("name"), F.col("event_type").alias("item")
     )
@@ -439,7 +439,7 @@ def test_ew_stream_snapshot_equals_batch_histogram(spark, tmp_path):
     makes the ew kind streaming-maintainable (and which the equi-depth
     kind, being order statistics, can never have)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from cyber_etl_spark.operators.statcat import equiwidth_counts
     from cyber_etl_spark.streaming import read_event_stream, run_stream_to_memory
@@ -461,7 +461,7 @@ def test_ew_stream_snapshot_equals_batch_histogram(spark, tmp_path):
     d.mkdir()
     for i in range(3):
         chunk = pdf.iloc[i * 300 : (i + 1) * 300]
-        pq.write_table(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
+        write_feed(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
     stream = read_event_stream(spark, str(d), empty_dir_ts="micros").select(
         F.lit("t.x").alias("name"), F.col("value").alias("x")
     )
@@ -488,7 +488,7 @@ def test_minh_stream_snapshot_equals_batch_signature(spark, tmp_path):
     because MIN is idempotent, REPLAYING a chunk (at-least-once
     delivery) must leave the signature unchanged."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from cyber_etl_spark.operators.statcat import minhash_rows
     from cyber_etl_spark.streaming import read_event_stream, run_stream_to_memory
@@ -511,9 +511,9 @@ def test_minh_stream_snapshot_equals_batch_signature(spark, tmp_path):
     d.mkdir()
     for i in range(2):
         chunk = pdf.iloc[i * 300 : (i + 1) * 300]
-        pq.write_table(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
+        write_feed(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
     # chunk 2 REPLAYS chunk 0 — idempotence under at-least-once delivery
-    pq.write_table(
+    write_feed(
         pa.Table.from_pandas(pdf.iloc[0:300]), str(d / "chunk_2.parquet")
     )
     stream = read_event_stream(spark, str(d), empty_dir_ts="micros").select(
@@ -590,7 +590,7 @@ def test_tri_stream_snapshot_equals_batch_build(spark, tmp_path):
     of everything fed so far — the additive identity q407 gates,
     holding under arbitrary micro-batch slicing."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from cyber_etl_spark.operators.statcat import trigram_rows
     from cyber_etl_spark.streaming import read_event_stream, run_stream_to_memory
@@ -615,7 +615,7 @@ def test_tri_stream_snapshot_equals_batch_build(spark, tmp_path):
     d.mkdir()
     for i in range(3):
         chunk = pdf.iloc[i * 150 : (i + 1) * 150]
-        pq.write_table(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
+        write_feed(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
     stream = read_event_stream(spark, str(d), empty_dir_ts="micros").select(
         F.lit("docs").alias("name"), F.col("props").alias("s")
     )

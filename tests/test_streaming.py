@@ -294,13 +294,13 @@ def test_debounce_stream_matches_batch_q134(spark, sf_smoke, tmp_path):
     d = tmp_path / "debounce_feed"
     d.mkdir()
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     n = events.count()
     pdf = events.orderBy("ts", "event_id").toPandas()
     for i in range(3):  # flat files: the file-stream source does not recurse
         chunk = pdf.iloc[i * n // 3 : (i + 1) * n // 3]
-        pq.write_table(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
+        write_feed(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
     stream = read_event_stream(
         spark, str(d), empty_dir_ts="micros"
     )
@@ -325,7 +325,7 @@ def test_ewma_stream_matches_batch_q155(spark, sf_smoke, tmp_path):
     micro-batches: the feed is split into three ts-ordered files
     consumed one per trigger."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from cyber_etl_spark.plans import QUERIES
     from cyber_etl_spark.sources import read_table
@@ -339,7 +339,7 @@ def test_ewma_stream_matches_batch_q155(spark, sf_smoke, tmp_path):
     pdf = events.orderBy("ts", "event_id").toPandas()
     for i in range(3):
         chunk = pdf.iloc[i * n // 3 : (i + 1) * n // 3]
-        pq.write_table(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
+        write_feed(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
     stream = read_event_stream(spark, str(d), empty_dir_ts="micros")
     run_stream_to_memory(ewma_stream(stream), "ewma_mem", mode="update")
     got = {
@@ -360,7 +360,7 @@ def test_pack_stream_first_fit_matches_reference(spark, sf_smoke, tmp_path):
     micro-batches (bins opened in chunk 1 receive documents from later
     chunks)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
     from pyspark.sql import functions as F
 
     from cyber_etl_spark.sources import read_table
@@ -380,7 +380,7 @@ def test_pack_stream_first_fit_matches_reference(spark, sf_smoke, tmp_path):
     n = len(meta)
     for i in range(3):
         chunk = meta.iloc[i * n // 3 : (i + 1) * n // 3]
-        pq.write_table(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
+        write_feed(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
     stream = (
         spark.readStream.schema("doc_id long, source string, n_tokens long")
         .option("maxFilesPerTrigger", 1)
@@ -444,7 +444,7 @@ def test_weighted_sample_stream_matches_driver_replay(spark, sf_smoke, tmp_path)
     import math
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from cyber_etl_spark.sources import read_table
     from cyber_etl_spark.streaming import read_event_stream, run_stream_to_memory
@@ -457,7 +457,7 @@ def test_weighted_sample_stream_matches_driver_replay(spark, sf_smoke, tmp_path)
     pdf = events.orderBy("ts", "event_id").toPandas()
     for i in range(3):
         chunk = pdf.iloc[i * n // 3 : (i + 1) * n // 3]
-        pq.write_table(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
+        write_feed(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
     stream = read_event_stream(spark, str(d), empty_dir_ts="micros")
     run_stream_to_memory(weighted_sample_stream(stream), "ws_mem", mode="update")
 
@@ -496,7 +496,7 @@ def test_weighted_sample_stream_nondefault_k(spark, sf_smoke, tmp_path):
     a matching state schema (review r7: a fixed 10-slot schema crashed
     every other k)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from cyber_etl_spark.sources import read_table
     from cyber_etl_spark.streaming import read_event_stream, run_stream_to_memory
@@ -505,7 +505,7 @@ def test_weighted_sample_stream_nondefault_k(spark, sf_smoke, tmp_path):
     events = read_table(spark, sf_smoke, "events").limit(400)
     d = tmp_path / "wsk_feed"
     d.mkdir()
-    pq.write_table(
+    write_feed(
         pa.Table.from_pandas(events.toPandas()), str(d / "chunk_0.parquet")
     )
     stream = read_event_stream(spark, str(d), empty_dir_ts="micros")
@@ -526,7 +526,7 @@ def test_heavy_hitter_stream_matches_replay_and_mg_bounds(spark, sf_smoke, tmp_p
     import hashlib
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from cyber_etl_spark.sources import read_table
     from cyber_etl_spark.streaming import read_event_stream, run_stream_to_memory
@@ -552,7 +552,7 @@ def test_heavy_hitter_stream_matches_replay_and_mg_bounds(spark, sf_smoke, tmp_p
     d.mkdir()
     for i in range(3):
         chunk = full.iloc[i * n // 3 : (i + 1) * n // 3]
-        pq.write_table(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
+        write_feed(pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet"))
     stream = read_event_stream(spark, str(d), empty_dir_ts="micros").selectExpr(
         item_expr
     )
@@ -615,7 +615,7 @@ def test_cdc_apply_stream_matches_batch_q180(spark, sf_smoke, tmp_path):
     number so later triggers genuinely override earlier state (and
     deletes erase keys that earlier triggers had upserted)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from cyber_etl_spark.plans import QUERIES
     from cyber_etl_spark.plans.relational2 import cdc_change_log
@@ -627,7 +627,7 @@ def test_cdc_apply_stream_matches_batch_q180(spark, sf_smoke, tmp_path):
     d.mkdir()
     for s in range(3):  # one file per seq value -> 3 ordered triggers
         chunk = log[log["seq"] == s]
-        pq.write_table(pa.Table.from_pandas(chunk), str(d / f"seq_{s}.parquet"))
+        write_feed(pa.Table.from_pandas(chunk), str(d / f"seq_{s}.parquet"))
     stream = (
         spark.readStream.schema("k long, seq long, op string, v double")
         .option("maxFilesPerTrigger", 1)
@@ -662,7 +662,7 @@ def test_holt_stream_matches_kernel_state(spark, sf_smoke, tmp_path):
     files, and the final emitted state per type must equal a replay of
     operators/forecast's exact float expression tree."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from pyspark.sql import functions as F
 
@@ -685,7 +685,7 @@ def test_holt_stream_matches_kernel_state(spark, sf_smoke, tmp_path):
     for i in range(3):
         sel = days[i * n // 3 : (i + 1) * n // 3]
         chunk = grid[grid["day"].isin(sel)]
-        pq.write_table(
+        write_feed(
             pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet")
         )
     stream = (
@@ -723,7 +723,7 @@ def test_decayed_counter_stream_matches_batch_formula(spark, sf_smoke, tmp_path)
     from datetime import date
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from pyspark.sql import functions as F
 
@@ -746,7 +746,7 @@ def test_decayed_counter_stream_matches_batch_formula(spark, sf_smoke, tmp_path)
     for i in range(3):
         sel = days[i * n // 3 : (i + 1) * n // 3]
         chunk = grid[grid["day"].isin(sel)]
-        pq.write_table(
+        write_feed(
             pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet")
         )
     stream = (
@@ -786,7 +786,7 @@ def test_decayed_counter_stream_out_of_order_days(spark, sf_smoke, tmp_path):
     from datetime import date
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from pyspark.sql import functions as F
 
@@ -810,7 +810,7 @@ def test_decayed_counter_stream_out_of_order_days(spark, sf_smoke, tmp_path):
     # feed order: middle, FIRST (late — all days precede the frontier), last
     for i, sel in enumerate([thirds[1], thirds[0], thirds[2]]):
         chunk = grid[grid["day"].isin(sel)]
-        pq.write_table(
+        write_feed(
             pa.Table.from_pandas(chunk), str(d / f"chunk_{i}.parquet")
         )
     stream = (
@@ -849,7 +849,7 @@ def test_hll_register_stream_twin(spark, sf_smoke, tmp_path):
     import hashlib
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from cyber_etl_spark.plans import QUERIES
     from cyber_etl_spark.sources import read_table
@@ -864,7 +864,7 @@ def test_hll_register_stream_twin(spark, sf_smoke, tmp_path):
     n = len(order)
     for i in range(3):
         chunk = order.iloc[i * n // 3 : (i + 1) * n // 3]
-        pq.write_table(pa.Table.from_pandas(chunk), str(d / f"c{i}.parquet"))
+        write_feed(pa.Table.from_pandas(chunk), str(d / f"c{i}.parquet"))
     stream = (
         spark.readStream.schema("event_type string, user_id long")
         .option("maxFilesPerTrigger", 1)
@@ -912,7 +912,7 @@ def test_trailing_anomaly_stream_matches_batch_q319(spark, sf_smoke, tmp_path):
     micro-batches): same (type, day) rows emitted, same n_trail/z/flag
     to the last bit."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from pyspark.sql import functions as F
 
@@ -935,7 +935,7 @@ def test_trailing_anomaly_stream_matches_batch_q319(spark, sf_smoke, tmp_path):
     for i in range(3):
         sel = days[i * n // 3 : (i + 1) * n // 3]
         chunk = grid[grid["day"].isin(sel)]
-        pq.write_table(pa.Table.from_pandas(chunk), str(d / f"c{i}.parquet"))
+        write_feed(pa.Table.from_pandas(chunk), str(d / f"c{i}.parquet"))
     stream = (
         spark.readStream.schema("event_type string, day string, cnt long")
         .option("maxFilesPerTrigger", 1)
@@ -962,7 +962,7 @@ def test_twap_stream_twin(spark, sf_smoke, tmp_path):
     integers (n_intervals, held_seconds) and half-away twap rational to
     the exact value."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from pyspark.sql import functions as F
 
@@ -990,7 +990,7 @@ def test_twap_stream_twin(spark, sf_smoke, tmp_path):
     n = len(pdf)
     for i in range(3):
         chunk = pdf.iloc[i * n // 3 : (i + 1) * n // 3]
-        pq.write_table(pa.Table.from_pandas(chunk), str(d / f"c{i}.parquet"))
+        write_feed(pa.Table.from_pandas(chunk), str(d / f"c{i}.parquet"))
     stream = (
         spark.readStream.schema(
             "user_id long, event_type string, ts_us long, value double"
@@ -1039,7 +1039,7 @@ def test_sprt_stream_twin(spark, sf_smoke, tmp_path):
     the batch row bit-for-bit (integer LLR included), and the stream's
     first non-continue day must match the batch's."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from pyspark.sql import functions as F
 
@@ -1086,7 +1086,7 @@ def test_sprt_stream_twin(spark, sf_smoke, tmp_path):
     n = len(d)
     for i in range(3):
         chunk = d.iloc[i * n // 3 : (i + 1) * n // 3]
-        pq.write_table(
+        write_feed(
             pa.Table.from_pandas(chunk[["stream", "day", "trials", "conv"]]),
             str(feed / f"c{i}.parquet"),
         )
@@ -1137,7 +1137,7 @@ def test_twap_stream_tiebreak_col_orders_equal_timestamps(spark, tmp_path):
     higher-event_id one (the batch lead() order), so the final interval
     accumulates xu(value of event 2), not event 1's."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from _feed import write_feed
 
     from cyber_etl_spark.streaming import run_stream_to_memory
     from cyber_etl_spark.streaming.stateful import twap_stream
@@ -1152,7 +1152,7 @@ def test_twap_stream_tiebreak_col_orders_equal_timestamps(spark, tmp_path):
         "event_id": [2, 1, 3],
     }
     # write with the tie REVERSED in file order: event_id 2 before 1
-    pq.write_table(pa.table(rows), str(d / "c0.parquet"))
+    write_feed(pa.table(rows), str(d / "c0.parquet"))
     stream = (
         spark.readStream.schema(
             "user_id long, event_type string, ts_us long, value double,"
