@@ -66,7 +66,9 @@ def co_supply_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return artifact(spark, sf_dir, "weighted", build)
 
 
-def co_supply_counts(spark: SparkSession, sf_dir: str) -> "dict[str, np.ndarray] | None":
+def co_supply_counts(
+    spark: SparkSession, sf_dir: str
+) -> "dict[str, np.ndarray] | None":
     """The co-supply graph's i<j half as driver arrays ``{src, dst,
     weight}`` sorted by (src, dst), or None when ``lineitem`` or its
     supplier-pair bound is past ``_BCAST_MAX_ROWS`` — the one point
@@ -83,9 +85,9 @@ def _driver_pair_counts(li: DataFrame) -> "dict[str, np.ndarray] | None":
     l_suppkey) on the driver, or None past either bound of the cap.
 
     The collect is bounded (``limit(cap + 1)`` over one task), so the
-    driver never holds more than cap + 1 rows, and the pair counts are refused when
-    S(S−1)/2 > cap for S distinct suppliers, which bounds the count
-    array too.  Pairs are deduplicated in numpy (a Spark ``distinct``
+    driver never holds more than cap + 1 rows, and the pair counts are
+    refused when S(S−1)/2 > cap for S distinct suppliers, which bounds
+    the count array too.  Pairs are deduplicated in numpy (a Spark ``distinct``
     before the collect costs a shuffle), then each part's sorted
     supplier run pairs position t with position t + d, one pass per d
     over the rows whose run still reaches that far — work proportional
