@@ -27,13 +27,11 @@ import weakref
 from contextlib import contextmanager
 
 import numpy as np
-import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.quantiles import _local_values_df
+from ..session import local_frame
 
 # Derived tables (symmetrized edges, degree/share tables) are pure
 # functions of their input edge DataFrame and get rebuilt by every
@@ -144,8 +142,8 @@ def _on_driver(df: DataFrame, rows: int) -> dict:
     refused before anything is collected.  A frame marked
     ``_cyber_base`` is a projection of that pinned frame and reads its
     copy, so projections of one artifact share one collect.  Callers
-    return their result as ``createDataFrame`` of a pandas frame: with
-    Arrow on that is a local relation, read with no job and no worker.
+    return their result as a :func:`local_frame`, read with no job and
+    no worker.
     """
     if rows > _BCAST_MAX_ROWS:
         raise ValueError(
@@ -159,16 +157,18 @@ def _on_driver(df: DataFrame, rows: int) -> dict:
 
 
 def _from_driver(spark, cols: dict) -> DataFrame:
-    """The inverse of :func:`_on_driver`: a frame over the driver arrays
-    ``cols`` (``{column: ndarray}``), with those arrays as its driver copy
-    and their length as its ``_cyber_rows`` — an artifact built on the
-    driver that a later driver-local loop reads with no collect.
+    """The inverse of :func:`_on_driver`: a frame over the driver integer
+    arrays ``cols`` (``{column: ndarray}``, each column a ``bigint``),
+    with those arrays as its driver copy and their length as its
+    ``_cyber_rows`` — an artifact built on the driver that a later
+    driver-local loop reads with no collect.
 
     The Arrow local relation is pinned lazily: building the frame
     submits no job, and distributed consumers that iterate over it read
     the checkpointed rows from the first action on, not a relation
     re-shipped with every plan."""
-    df = spark.createDataFrame(pa.table(cols)).localCheckpoint(eager=False)
+    ddl = ", ".join(f"{c} bigint" for c in cols)
+    df = local_frame(spark, cols, ddl).localCheckpoint(eager=False)
     df._cyber_rows = len(next(iter(cols.values())))
     _derived(df, ("driver",), lambda: cols)
     return df
@@ -204,7 +204,7 @@ def _pin(df: DataFrame, w: int, eager: bool) -> DataFrame:
     exponential: chained pins ran flat for ~14 supersteps, then ×2-3 per
     superstep, all of it on the driver after the last job ended.
     Re-wrapping the checkpoint's RDD as a new relation (no job, no
-    Python round trip — never ``createDataFrame(df.rdd)``) drops the
+    Python round trip — never a rebuild from the pickled ``df.rdd``) drops the
     inherited estimate; the new frame reports the session default
     (``spark.sql.defaultSizeInBytes``) like any RDD-backed relation.
 
@@ -964,8 +964,9 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 4) -> DataFrame:
                 break
         deg = local_deg(act)
         keep = deg > 0
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame({"id": ids[keep], "core_deg": deg[keep]}),
+        return local_frame(
+            edges.sparkSession,
+            {"id": ids[keep], "core_deg": deg[keep]},
             "id bigint, core_deg bigint",
         )
 
@@ -1168,7 +1169,7 @@ def sssp_hop_limited(
 
     base, rows = _derived(wedges, ("sssp_edges",), build)
     if rows == 0:
-        return _local_values_df(spark, [], "id bigint, dist bigint")
+        return local_frame(spark, [], "id bigint, dist bigint")
     if rows <= _BCAST_MAX_ROWS:
         cols = _on_driver(base, rows)
         s, d, w = (np.asarray(cols[c], "int64") for c in ("src", "dst", "weight"))
@@ -1183,8 +1184,8 @@ def sssp_hop_limited(
             np.minimum.at(nxt, d[out], dist[s[out]] + w[out])
             dist = nxt
         keep = dist != unreached
-        return spark.createDataFrame(
-            pd.DataFrame({"id": ids[keep], "dist": dist[keep]}), "id bigint, dist bigint"
+        return local_frame(
+            spark, {"id": ids[keep], "dist": dist[keep]}, "id bigint, dist bigint"
         )
 
     e = base.select("src", "dst", F.col("weight").cast("long").alias("w"))
@@ -1195,7 +1196,7 @@ def sssp_hop_limited(
         return e.unionByName(loops).localCheckpoint(eager=True)
 
     ex = _derived(wedges, ("sssp_loops",), build_loops)
-    seed = _local_values_df(spark, [[int(source), 0]], "id bigint, dist bigint")
+    seed = local_frame(spark, [[int(source), 0]], "id bigint, dist bigint")
     dist = seed
     for _ in range(iterations):
         dist = (
@@ -1322,15 +1323,7 @@ def betweenness_sampled(
     n_nodes = _vertices(edges)[1]
     small = len(sources) * n_nodes <= _BCAST_MAX_ROWS
     bx = (lambda d: F.broadcast(d)) if small else (lambda d: d)
-    # NOT a VALUES relation: r13 re-tested the r12 hypothesis that the
-    # duplicated-attribute projection (s, s AS v) caused the Catalyst
-    # attribute-rewrite NoSuchElementException ("key not found: v#…") —
-    # emitting s and v as INDEPENDENT VALUES columns still fails the
-    # exact-path test with the same error, so the bug is the
-    # LocalRelation itself under this plan shape, not the projection.
-    # Keep the RDD-backed frame; the Python round-trip is once per call,
-    # not per level.
-    src_df = spark.createDataFrame([(int(s),) for s in sources], "s long")
+    src_df = local_frame(spark, [[int(s)] for s in sources], "s long")
     lvl0 = src_df.select(
         "s", F.col("s").alias("v"), F.lit(0).alias("dist"), F.lit(1.0).alias("sigma")
     ).localCheckpoint(eager=True)

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..session import artifact
 from ..sources import read_table
+from ..sources.catalog import footer_rows
 
 # Set size past which the distributed pair expansion scatters a part's
 # supplier set as chunk pairs (operators/skew.chunked_pair_expand).
@@ -73,11 +74,18 @@ def co_supply_counts(
     weight}`` sorted by (src, dst), or None when ``lineitem`` or its
     supplier-pair bound is past ``_BCAST_MAX_ROWS`` — the one point
     where every co-supply artifact picks the driver build or the
-    distributed one, so a session scans ``lineitem`` for it once."""
-    return artifact(
-        spark, sf_dir, "pairs",
-        lambda: _driver_pair_counts(read_table(spark, sf_dir, "lineitem")),
-    )
+    distributed one, so a session scans ``lineitem`` for it once.
+    A ``lineitem`` whose parquet footers already count more rows than
+    the cap is refused with no Spark job."""
+    from .algorithms import _BCAST_MAX_ROWS
+
+    def build():
+        rows = footer_rows(sf_dir, "lineitem")
+        if rows is not None and rows > _BCAST_MAX_ROWS:
+            return None
+        return _driver_pair_counts(read_table(spark, sf_dir, "lineitem"))
+
+    return artifact(spark, sf_dir, "pairs", build)
 
 
 def _driver_pair_counts(li: DataFrame) -> "dict[str, np.ndarray] | None":

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import cosine_similarity, dot, to_double_array
-from .quantiles import _local_values_df
+from ..session import local_frame
 
 # Target bytes for one folded corpus block (ids + double matrix) in the
 # blocked-GEMM operators.  64 MB keeps a block row far under Spark's 2 GB
@@ -559,7 +559,8 @@ def eps_neighbor_pairs(
     crows = sorted(cents.collect(), key=lambda r: r["cell"])
     if not crows:  # empty corpus → empty pair table, same as the exact kernel
         id_type = vecs.schema["id"].dataType
-        return corpus.sparkSession.createDataFrame(
+        return local_frame(
+            corpus.sparkSession,
             [],
             _ST(
                 [
@@ -638,7 +639,7 @@ def eps_neighbor_pairs(
         if i != j or p <= q
     ]
     spark = corpus.sparkSession
-    allowed_df = _local_values_df(
+    allowed_df = local_frame(
         spark, allowed, "cell_a long, sub_a int, cell_b long, sub_b int"
     )
     chunks = members.groupBy(
@@ -711,10 +712,10 @@ def ivf_assign(
         .limit(n_cells)
     )
     # Materialize the seed pick ONCE (one TakeOrdered job) and rebuild it
-    # as a LocalRelation: the GEMM assignment's driver-side centroid read
+    # as a local relation: the GEMM assignment's driver-side centroid read
     # AND the caller's probe-selection subtree both consume the local
     # table, so neither re-scans the corpus inside the main job.
-    cents = corpus.sparkSession.createDataFrame(seeds.collect(), seeds.schema)
+    cents = local_frame(corpus.sparkSession, seeds.collect(), seeds.schema)
     vecs = corpus.select(
         F.col(id_col).alias("id"), to_double_array(F.col(vec_col)).alias("v")
     )
@@ -769,7 +770,7 @@ def nearest_centroid_assign(
         # it stays loud.  The emptiness probe is one limit(1) job, paid
         # only on this error path.
         if vecs.limit(1).count() == 0:
-            return vecs.sparkSession.createDataFrame([], out_schema)
+            return local_frame(vecs.sparkSession, [], out_schema)
         raise ValueError(
             "empty centroid table with a non-empty vector input — "
             "refusing to silently assign nothing"

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 _MAX_BITS = 1 << 22  # 512 KB of bitmap literal in the probe plan
 _WORD = 64
 
@@ -113,7 +115,7 @@ def bloom_prefilter(
     (Measured: the literal form's 600 KB plan strings cost ~2s/run in
     plan descriptions at 3.7k words; this form is flat.)"""
     spark = big.sparkSession
-    wdf = spark.createDataFrame([(words,)], "_bloom_words array<bigint>")
+    wdf = local_frame(spark, [[words]], "_bloom_words array<bigint>")
     probe = big.crossJoin(F.broadcast(wdf))
     cond = _probe_cond(F.col(key), F.col("_bloom_words"), num_bits, k)
     return probe.where(cond).drop("_bloom_words")

@@ -87,9 +87,8 @@ def holt_linear_forecast(
             }
         )
 
-    return daily.select(order_col, value_col).coalesce(1).mapInPandas(
-        kernel, schema
-    )
+    one_task = daily.select(order_col, value_col).coalesce(1).limit(_MAX_SERIES_ROWS + 1)
+    return one_task.mapInPandas(kernel, schema)
 
 
 def holt_winters_forecast(
@@ -162,9 +161,8 @@ def holt_winters_forecast(
             }
         )
 
-    return daily.select(order_col, value_col).coalesce(1).mapInPandas(
-        kernel, schema
-    )
+    one_task = daily.select(order_col, value_col).coalesce(1).limit(_MAX_SERIES_ROWS + 1)
+    return one_task.mapInPandas(kernel, schema)
 
 
 def holt_winters_backtest(
@@ -226,9 +224,8 @@ def holt_winters_backtest(
             }
         )
 
-    return daily.select(order_col, value_col).coalesce(1).mapInPandas(
-        kernel, schema
-    )
+    one_task = daily.select(order_col, value_col).coalesce(1).limit(_MAX_SERIES_ROWS + 1)
+    return one_task.mapInPandas(kernel, schema)
 
 
 def croston_forecast(

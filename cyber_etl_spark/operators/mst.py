@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph.algorithms import _pin, _width
-from .quantiles import _local_values_df
+from ..session import local_frame
 
 
 def _contract(
@@ -222,7 +222,7 @@ def boruvka_msf(
     """
     spark = edges.sparkSession
     _, selected, picked, _ = _contract(edges, tail_cap, max_rounds)
-    tail = _local_values_df(
+    tail = local_frame(
         spark, [list(t) for t in sorted(picked)], "src long, dst long"
     )
     out = tail
@@ -255,7 +255,7 @@ def boruvka_components(
     e3 = edges.select("src", "dst", F.lit(0).cast("long").alias("d"))
     comp, _, _, roots = _contract(e3, tail_cap, max_rounds)
     if roots:
-        rmap = _local_values_df(
+        rmap = local_frame(
             spark, [list(t) for t in sorted(roots.items())], "_old long, _root long"
         )
         comp = comp.join(

@@ -150,4 +150,4 @@ def power_iterate_table(
             }
         )
 
-    return am.coalesce(1).mapInPandas(kernel, schema)
+    return am.coalesce(1).limit(dim * dim + 1).mapInPandas(kernel, schema)

@@ -108,6 +108,5 @@ def epsilon_greedy_replay(
             }
         )
 
-    return daily.select(order_col, *reward_cols).coalesce(1).mapInPandas(
-        kernel, schema
-    )
+    one_task = daily.select(order_col, *reward_cols).coalesce(1).limit(_MAX_GRID_ROWS + 1)
+    return one_task.mapInPandas(kernel, schema)

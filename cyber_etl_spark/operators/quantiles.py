@@ -59,81 +59,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-
-def _sql_literal(v, sql_type: str) -> str:
-    """Render one Python value as a CAST('…' AS type) Spark SQL literal
-    whose parsed value round-trips exactly.  Floats go through repr()
-    (shortest round-trip decimal → exact DOUBLE); strings escape quote
-    and backslash.  Raises TypeError for types no caller ships (the
-    caller falls back to createDataFrame)."""
-    import datetime
-    import decimal
-
-    if v is None:
-        return f"CAST(NULL AS {sql_type})"
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, float):
-        if v != v:
-            s = "NaN"
-        elif v == float("inf"):
-            s = "Infinity"
-        elif v == float("-inf"):
-            s = "-Infinity"
-        else:
-            s = repr(v)
-        return f"CAST('{s}' AS {sql_type})"
-    if isinstance(v, (int, decimal.Decimal)):
-        return f"CAST({v} AS {sql_type})"
-    if isinstance(v, str):
-        esc = v.replace("\\", "\\\\").replace("'", "\\'")
-        return f"CAST('{esc}' AS {sql_type})"
-    if isinstance(v, datetime.datetime):
-        return f"TIMESTAMP'{v.isoformat(sep=' ')}'"
-    if isinstance(v, datetime.date):
-        return f"DATE'{v.isoformat()}'"
-    raise TypeError(f"_sql_literal: unsupported type {type(v).__name__}")
-
-
-def _local_values_df(spark, rows: list[list], schema: StructType | str):
-    """Ship a small driver-side table as a pure-JVM VALUES LocalRelation.
-
-    ``spark.createDataFrame(rows)`` builds an RDD-backed frame whose every
-    downstream materialization — a BroadcastExchange in particular — pays
-    Python-worker round-trips (the r8 q296 lesson, measured ~0.3 s per
-    broadcast consumer on this box; ~0.22 s even for a single direct
-    noop materialization of a 13-row frame, r12 A/B).  A VALUES relation
-    parses to a LocalRelation: broadcasting or materializing it is pure
-    JVM.  Falls back to createDataFrame for empty inputs (VALUES needs
-    ≥1 row), >1000 rows (plan-text size — the q122 big-literal rule) or
-    unsupported types.  ``schema`` may be a StructType or a DDL string.
-
-    ADVICE r12 note: the two paths differ in column NULLABILITY (VALUES
-    columns are non-nullable when every literal is non-null; the RDD
-    path keeps the declared schema), so a call site whose ROW COUNT is
-    data-dependent can see different physical shapes across scale
-    factors.  That is deliberate — plan-shape tests must not pin a
-    LocalTableScan for frames that can legitimately exceed the cap —
-    but strict-union/schema-equality consumers should normalize with an
-    explicit ``select(cast(...))`` projection rather than rely on one
-    path's nullability.
-    """
-    if isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
-    if not rows or len(rows) > 1000:
-        return spark.createDataFrame(rows, schema=schema)
-    types = [f.dataType.simpleString() for f in schema.fields]
-    try:
-        body = ", ".join(
-            "(" + ", ".join(_sql_literal(v, t) for v, t in zip(r, types)) + ")"
-            for r in rows
-        )
-    except TypeError:
-        return spark.createDataFrame(rows, schema=schema)
-    cols = ", ".join(
-        f"col{i + 1} AS `{f.name}`" for i, f in enumerate(schema.fields)
-    )
-    return spark.sql(f"SELECT {cols} FROM (VALUES {body})")
+from ..session import local_frame
 
 
 # Most rows a quantile kernel's driver-side control table (the
@@ -384,7 +310,7 @@ def exact_quantiles(
         else:
             qs = [at.get(g, {}).get(p * totals[g]) for p in pvals]
         out_rows.append(list(g) + qs)
-    return _local_values_df(spark, out_rows, res_schema)
+    return local_frame(spark, out_rows, res_schema)
 
 
 def histogram_quantiles(

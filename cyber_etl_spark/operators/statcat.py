@@ -74,8 +74,8 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .countmin import cms_sketch
-from .quantiles import _local_values_df
 
 CATALOG_SCHEMA = "tbl string, col string, kind string, r long, b long, v decimal(38,0)"
 
@@ -209,7 +209,7 @@ def equidepth_hist(df: DataFrame, tbl: str, col: str) -> DataFrame:
         for i in range(HIST_BUCKETS + 1)
     ]
     spark = df.sparkSession
-    return _local_values_df(spark, vals, CATALOG_SCHEMA)
+    return local_frame(spark, vals, CATALOG_SCHEMA)
 
 
 def equiwidth_counts(

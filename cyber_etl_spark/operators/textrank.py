@@ -69,6 +69,5 @@ def textrank_scores(edges: DataFrame, iterations: int = 5) -> DataFrame:
             {"word": nodes, "r_units": [r[u] for u in nodes]}
         )
 
-    return edges.select("u", "v", "w", "du").coalesce(1).mapInPandas(
-        kernel, schema
-    )
+    one_task = edges.select("u", "v", "w", "du").coalesce(1).limit(_MAX_EDGE_ROWS + 1)
+    return one_task.mapInPandas(kernel, schema)

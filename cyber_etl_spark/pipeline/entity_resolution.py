@@ -23,8 +23,8 @@ from pyspark.sql.window import Window
 
 from ..functions.strings import normalize_entity
 from ..graph.algorithms import connected_components
-from ..operators.quantiles import _local_values_df
 from ..operators.similarity import char_ngram_jaccard_join, token_jaccard_join
+from ..session import local_frame
 
 # deterministic stand-ins for the reference's per-type thresholds
 DEFAULT_THRESHOLDS = {"ORG": 0.6, "PERSON": 0.75, "GPE": 0.55, "PRODUCT": 0.6}
@@ -126,7 +126,7 @@ def resolve_entities(
         per_type.extend(type_edges(sub, thr, char_thresholds.get(t, default_char_threshold)))
     other = norm.join(
         F.broadcast(
-            _local_values_df(
+            local_frame(
                 norm.sparkSession, [[t] for t in thresholds], "type string"
             )
         ),

@@ -28,9 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import artifact
+from ..session import artifact, local_frame
 from ..sources import read_table
-from ..operators.quantiles import _local_values_df as _values_df
 from .registry import query
 
 
@@ -2251,6 +2250,11 @@ def q235_label_spreading(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Most transition-matrix rows the one-task Markov kernels (q236, q262)
+# accept: the matrix is event-TYPE cardinality squared, never data.
+_MAX_CHAIN_ROWS = 100_000
+
+
 def _journey_prob(spark: SparkSession, sf_dir: str):
     """Memoized (journey table, transition-probability table) of the
     first-order purchase-truncated Markov chain — q236's corpus-scale
@@ -2437,7 +2441,7 @@ def q236_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     chans = (
         j.where(F.col("st") != "__conv").select(F.col("st").alias("ch")).distinct()
     )
-    variants = _values_df(spark, [("base",)], "variant string").union(
+    variants = local_frame(spark, [("base",)], "variant string").union(
         chans.select(F.col("ch").alias("variant"))
     ).localCheckpoint(eager=True)  # feeds mt AND the result join
     mt = (
@@ -2459,7 +2463,7 @@ def q236_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not chunks:
             return
         pdf = pd.concat(chunks, ignore_index=True)
-        if len(pdf) > 100_000:
+        if len(pdf) > _MAX_CHAIN_ROWS:
             # bounded-state contract enforced, not just documented (the
             # exact_quantiles guard lesson): the matrix table is
             # |variants| x (channels+2)^2 — event-TYPE cardinality, not
@@ -2502,6 +2506,7 @@ def q236_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     absorbed = (
         mt.coalesce(1)
+        .limit(_MAX_CHAIN_ROWS + 1)
         .mapInPandas(kernel, "variant string, pc double")
         .localCheckpoint(eager=True)  # base + res both read it
     )

@@ -2224,7 +2224,7 @@ def q262_absorption_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     of t = 1 + Q·t run in ONE task with every per-step term snapped to
     the 1e-12 integer grid (order-independent sums → the numpy loop
     and the unrolled SQL walk bit-identical trajectories)."""
-    from ..plans.analytics2 import _journey_prob
+    from ..plans.analytics2 import _MAX_CHAIN_ROWS, _journey_prob
 
     _, prob = _journey_prob(spark, sf_dir)
     qt = prob.where(
@@ -2239,7 +2239,7 @@ def q262_absorption_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not chunks:
             return
         pdf = pd.concat(chunks, ignore_index=True)
-        if len(pdf) > 100_000:
+        if len(pdf) > _MAX_CHAIN_ROWS:
             # bounded-state contract (the q236 kernel guard): the
             # transient matrix is states², event-TYPE cardinality
             raise ValueError(
@@ -2268,7 +2268,8 @@ def q262_absorption_time(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    out = qt.coalesce(1).mapInPandas(kernel, "state string, exp_steps double")
+    one_task = qt.coalesce(1).limit(_MAX_CHAIN_ROWS + 1)
+    out = one_task.mapInPandas(kernel, "state string, exp_steps double")
     return out.orderBy("state")
 
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources import read_table
 from .analytics2 import _ha6, _ha6_sql
 from .registry import query
@@ -2943,7 +2944,7 @@ def _collect_bounded_groups(
     qs: DataFrame, key_col: str, required: tuple, query_name: str, max_rows: int = 8
 ) -> dict:
     """Driver-side collect of a quantile-kernel BOUNDARY table for the
-    VALUES-reshape discipline (q296/q310) — with the two contracts the
+    driver-side reshape (q296/q310) — with the two contracts the
     bare ``collect()`` left implicit (r8 advice + verdict item):
 
     - **bounded collect**: the frame must stay ≤ ``max_rows`` rows
@@ -2961,7 +2962,7 @@ def _collect_bounded_groups(
     if len(rows) > max_rows:
         raise ValueError(
             f"{query_name}: boundary-table collect exceeded {max_rows} rows — "
-            "group cardinality is no longer bounded; the driver-side VALUES "
+            "group cardinality is no longer bounded; the driver-side "
             "reshape must never collect an unbounded frame"
         )
     got = {r[key_col]: r for r in rows}
@@ -2970,7 +2971,7 @@ def _collect_bounded_groups(
         raise ValueError(
             f"{query_name}: required group(s) {missing} absent from the "
             f"'{key_col}' boundary table (tiny scale factor or over-filtered "
-            "input) — cannot build the VALUES reshape"
+            "input) — cannot build the driver-side reshape"
         )
     return got
 
@@ -3015,26 +3016,24 @@ def q296_qq_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     probs = {f"p{i}": i / 10.0 for i in range(1, 10)}
     qs = exact_quantiles(ev, "value", probs, ["event_type"])
     # the kernel output IS a driver-local boundary table (2 rows); the
-    # 9-row reshape happens driver-side and ships back as a VALUES
-    # LocalRelation — a python-frame x python-frame broadcast join paid
+    # 9-row reshape happens driver-side and ships back as a local
+    # relation — a python-frame x python-frame broadcast join paid
     # ~6 s/run in Python-worker round-trips for two 2-row inputs (r8
-    # measurement), vs ~0.1 s for the pure-JVM literal relation.  Float
-    # literals round-trip exactly via repr -> CAST(AS DOUBLE).
+    # measurement), vs ~0.1 s for the pure-JVM relation.
     rows = _collect_bounded_groups(
         qs, "event_type", ("purchase", "click"), "q296_qq_deciles"
     )
     qp, qc = rows["purchase"], rows["click"]
-    vals = ", ".join(
-        f"({i}, CAST('{qp[f'p{i}']!r}' AS DOUBLE),"
-        f" CAST('{qc[f'p{i}']!r}' AS DOUBLE))"
-        for i in range(1, 10)
+    t = local_frame(
+        spark, [[i, qp[f"p{i}"], qc[f"p{i}"]] for i in range(1, 10)],
+        "decile int, qp double, qc double",
     )
-    return spark.sql(
-        "SELECT CAST(decile AS INT) AS decile,"
-        " round(qp, 6) AS q_purchase, round(qc, 6) AS q_click,"
-        " round(qp - qc, 6) AS gap"
-        f" FROM (VALUES {vals}) AS t(decile, qp, qc) ORDER BY decile"
-    )
+    return t.select(
+        "decile",
+        F.round("qp", 6).alias("q_purchase"),
+        F.round("qc", 6).alias("q_click"),
+        F.round(F.col("qp") - F.col("qc"), 6).alias("gap"),
+    ).orderBy("decile")
 
 
 @query(
@@ -4343,8 +4342,8 @@ def q310_binning_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale plan: ONE quantile-kernel pass grouped by the half flag
     (boolean group key — two groups of unbounded size, exactly the
-    kernel's regime); the 9-row reshape is the q296 driver-side VALUES
-    discipline.  Exactness: identical-double interpolation (q61),
+    kernel's regime); the 9-row reshape is the q296 driver-side local
+    relation.  Exactness: identical-double interpolation (q61),
     6-dp round.
 
     Grid budget: datediff div 2 on calendar-day integers - tiny."""
@@ -4368,17 +4367,16 @@ def q310_binning_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         qs, "half", ("first", "second"), "q310_binning_drift"
     )
     q1, q2 = rows["first"], rows["second"]
-    vals = ", ".join(
-        f"({i}, CAST('{q1[f'p{i}']!r}' AS DOUBLE),"
-        f" CAST('{q2[f'p{i}']!r}' AS DOUBLE))"
-        for i in range(1, 10)
+    t = local_frame(
+        spark, [[i, q1[f"p{i}"], q2[f"p{i}"]] for i in range(1, 10)],
+        "decile int, a double, b double",
     )
-    return spark.sql(
-        "SELECT CAST(decile AS INT) AS decile,"
-        " round(a, 6) AS q_first_half, round(b, 6) AS q_second_half,"
-        " round(b - a, 6) AS shift"
-        f" FROM (VALUES {vals}) AS t(decile, a, b) ORDER BY decile"
-    )
+    return t.select(
+        "decile",
+        F.round("a", 6).alias("q_first_half"),
+        F.round("b", 6).alias("q_second_half"),
+        F.round(F.col("b") - F.col("a"), 6).alias("shift"),
+    ).orderBy("decile")
 
 
 @query(

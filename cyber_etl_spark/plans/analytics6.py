@@ -18,10 +18,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.statcat import CMS_DEPTH, CMS_WIDTH
+from ..session import local_frame
 from ..sources import read_table
 from .analytics2 import _ha6_sql
 from .analytics5 import _md5_mod, _md5_mod_sql
-from ..operators.quantiles import _local_values_df as _values_df
 from .registry import query
 
 
@@ -767,8 +767,8 @@ def q337_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     15-cell contingency table; the iteration is constant-size state, so
     it runs DRIVER-SIDE on the guarded bounded collect (≤64 cells, the
     q223/q296 rule — 8 distributed supersteps on 15 rows would be pure
-    scheduling overhead) and ships back as a VALUES LocalRelation (pure
-    JVM, no pythonized partitions).  Exactness: seed weights and target
+    scheduling overhead) and ships back as a local relation (pure JVM,
+    no pythonized partitions).  Exactness: seed weights and target
     margins are exact integer micro-units; each half-step is ONE float
     expression — floor(float(w)·float(target)/float(margin) + 0.5) —
     replayed operation-for-operation by the generated 8-level
@@ -822,18 +822,10 @@ def q337_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
             (p, s): math.floor(float(v) * float(cu[s]) / float(cs[s]) + 0.5)
             for (p, s), v in w.items()
         }
-    for p, s in w:
-        if "'" in p or "'" in s:  # VALUES-literal safety, not expected
-            raise ValueError("q337_ipf_raking: quote in margin key")
-    vals = ", ".join(
-        f"('{p}', '{s}', {seed[(p, s)]}, {w[(p, s)]})" for p, s in sorted(w)
-    )
-    return spark.sql(
-        f"SELECT priority, status, CAST(n AS BIGINT) AS n_seed,"
-        f" CAST(w AS DOUBLE) / 1000000 AS raked"
-        f" FROM (VALUES {vals}) AS t(priority, status, n, w)"
-        f" ORDER BY priority, status"
-    )
+    return local_frame(
+        spark, [[p, s, seed[(p, s)], float(w[(p, s)]) / 1000000] for p, s in sorted(w)],
+        "priority string, status string, n_seed bigint, raked double",
+    ).orderBy("priority", "status")
 
 
 @query(
@@ -1534,8 +1526,8 @@ def q343_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform state is a 64-int vector bounded by construction (the
     q216 grid class), so the pyramid replays driver-side in exact
     Python integers under a limit-capped collect (the q223 /
-    bounded-artifact serving rule) and publishes via a VALUES
-    LocalRelation.  Exactness:
+    bounded-artifact serving rule) and publishes a local relation.
+    Exactness:
     unnormalized Haar sums/differences are pure integers; level-ℓ
     energy Σd²/2^ℓ is a DYADIC rational (numerator < 2^53), so the
     published double is EXACT in both engines; the energy share is a
@@ -1587,8 +1579,6 @@ def q343_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    from ..operators.quantiles import _local_values_df
-
     schema = StructType(
         [
             StructField("level", IntegerType()),
@@ -1597,7 +1587,7 @@ def q343_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("energy_share", DoubleType()),
         ]
     )
-    return _local_values_df(spark, vals, schema)
+    return local_frame(spark, vals, schema)
 
 
 def _fertility_oracle() -> str:
@@ -3005,7 +2995,7 @@ def q357_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the greedy loop is bounded state (3 queries × 20 candidates), so it
     runs driver-side on a guarded collect (q337's rule) with pair
     similarities computed from the SAME quantized integers, and ships
-    back as a VALUES relation.  Exactness: vectors quantize to the
+    back as a local relation.  Exactness: vectors quantize to the
     1e-6 integer grid, dots/norms are exact integers, every cosine is
     the engine-identical floor(double·1e6 + 0.5) snap, and MMR scores
     7·rel_u − 3·maxsim_u are pure integers — selection and tie-breaks
@@ -3111,17 +3101,11 @@ def q357_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             selected.append((best[0], best[2]))
             out.append((qid, pos, best[0], best[1], best[2]))
             del remaining[best[0]]
-    vals = ", ".join(
-        f"({q}, {p}, {v}, {r}, {s})" for q, p, v, r, s in out
-    )
-    return spark.sql(
-        f"SELECT query_id, CAST(position AS INT) AS position, vec_id,"
-        f" CAST(rel_u AS DOUBLE) / 1000000 AS relevance,"
-        f" CAST(score AS DOUBLE) / 10000000 AS mmr_score"
-        f" FROM (VALUES {vals})"
-        f" AS t(query_id, position, vec_id, rel_u, score)"
-        f" ORDER BY query_id, position"
-    )
+    return local_frame(
+        spark, [[q, p, v, float(r) / 1000000, float(s) / 10000000] for q, p, v, r, s in out],
+        "query_id bigint, position int, vec_id bigint, relevance double,"
+        " mmr_score double",
+    ).orderBy("query_id", "position")
 
 
 @query(
@@ -5241,8 +5225,8 @@ def q375_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         e = cms_inner_product(cells, a, b)
         x = exact_degree_product(spark, sf_dir, a, b)
         out.append((name, x, e, e - x, _ha6_py(e - x, x)))
-    return _values_df(spark, 
-        out,
+    return local_frame(
+        spark, out,
         "join_name string, exact_pairs long, cms_estimate long,"
         " overcount long, overcount_share double",
     )
@@ -6257,8 +6241,8 @@ def q415_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("a.nk").alias("nk"), F.col("a.n").alias("n"), F.col("a.z").alias("z"))
         .agg(F.count(F.lit(1)).alias("rank"))
     )
-    th = _values_df(spark, 
-        list(zip(range(1, _BH_M + 1), _BH_T)), "k long, t double"
+    th = local_frame(
+        spark, list(zip(range(1, _BH_M + 1), _BH_T)), "k long, t double"
     )
     flag = rk.join(F.broadcast(th), rk.rank == th.k).select(
         "nk", "n", "z", "rank", "t", (F.abs(F.col("z")) >= F.col("t")).alias("passes")

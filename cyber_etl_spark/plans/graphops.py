@@ -15,9 +15,8 @@ from pyspark.sql import functions as F
 
 from ..graph.algorithms import connected_components, label_propagation, pagerank
 from ..graph.builder import co_supply_edges
-from ..session import artifact
+from ..session import artifact, local_frame
 from ..sources import read_table
-from ..operators.quantiles import _local_values_df as _values_df
 from .registry import query
 from .textops import _JACCARD_FROM_COMMON, _SHINGLES_CTE
 
@@ -2218,7 +2217,7 @@ def q405_single_linkage_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = msf.agg(F.min("w").alias("wmin"), F.max("w").alias("wmax")).collect()[0]
     wmin, wmax = int(b.wmin), int(b.wmax)
     ths = [(q, wmin + ((wmax - wmin) * q) // 4) for q in (1, 2, 3)]
-    th_df = _values_df(spark, ths, "t_idx long, t long")
+    th_df = local_frame(spark, ths, "t_idx long, t long")
     te = msf.crossJoin(F.broadcast(th_df)).where(F.col("w") >= F.col("t"))
     tag = F.col("t_idx") * F.lit(1_000_000_000_000)
     tagged = te.select(

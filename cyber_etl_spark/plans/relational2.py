@@ -9,9 +9,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, MapType, StringType
 
+from ..session import local_frame
 from ..sources import read_table
 from .registry import dsum_expr, query
-from ..operators.quantiles import _local_values_df as _values_df
 
 
 @query(
@@ -1408,8 +1408,8 @@ def q87_fuzzy_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape runs against a q-gram-blocked candidate set instead of the
     full cross."""
     part = read_table(spark, sf_dir, "part")
-    probes = _values_df(spark, 
-        [("small ring",), ("red widgit",), ("blue gadget",)], "probe string"
+    probes = local_frame(
+        spark, [("small ring",), ("red widgit",), ("blue gadget",)], "probe string"
     )
     # bounded variant: early-exits the DP past the threshold (returns -1),
     # O(k·n) instead of O(n·m) per comparison
@@ -2988,7 +2988,7 @@ def q173_hll_mergeable_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.select("event_type")
         .distinct()
         .unionByName(
-            _values_df(events.sparkSession, [("ALL",)], "event_type string")
+            local_frame(events.sparkSession, [("ALL",)], "event_type string")
         )
     )
     grid = types.crossJoin(

@@ -18,8 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.skew import salted_aggregate, salted_join
+from ..session import local_frame
 from ..sources import read_table
-from ..operators.quantiles import _local_values_df as _values_df
 from .registry import query
 
 
@@ -608,8 +608,8 @@ def q410_bloom_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
     )
     n_bits = {label: len({b for l2, b in pbit_rows if l2 == label}) for label, _ in probes}
-    pb = _values_df(spark, [list(t) for t in pbit_rows], "probe string, bit long")
-    nb = _values_df(spark, [list(t) for t in sorted(n_bits.items())], "probe string, need long")
+    pb = local_frame(spark, [list(t) for t in pbit_rows], "probe string, bit long")
+    nb = local_frame(spark, [list(t) for t in sorted(n_bits.items())], "probe string, need long")
     passed = (
         pb.join(bits, "bit")
         .groupBy("probe", "bin")
@@ -627,7 +627,7 @@ def q410_bloom_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("nrows").alias("rows_scanned"),
         )
     )
-    pdf = _values_df(spark, [list(t) for t in probes], "probe string, key long")
+    pdf = local_frame(spark, [list(t) for t in probes], "probe string, key long")
     actual = (
         pdf.join(binned, pdf.key == binned.k, "left")
         .groupBy("probe", "key")

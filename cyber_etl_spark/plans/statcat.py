@@ -39,8 +39,7 @@ from ..operators.statcat import (
     minhash_rows,
     value_moments,
 )
-from ..operators.quantiles import _local_values_df as _values_df
-from ..session import artifact
+from ..session import artifact, local_frame
 from ..sources import read_table
 from .analytics2 import _ha6_sql
 from .registry import query
@@ -369,8 +368,8 @@ def _estimates_from_catalog(spark: SparkSession, cat: DataFrame) -> DataFrame:
             )
         )
     out.sort(key=lambda t: (t[0], t[1], t[2]))
-    return _values_df(spark, 
-        out, "tbl string, col string, stat string, value double"
+    return local_frame(
+        spark, out, "tbl string, col string, stat string, value double"
     )
 
 
@@ -734,8 +733,8 @@ def q381_histogram_selectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (tbl, col, label, eu / 1e6, xu6 / 1e6, abs(eu - xu6) / 1e6)
             )
     out.sort(key=lambda t: (t[0], t[1], t[2]))
-    return _values_df(spark, 
-        out,
+    return local_frame(
+        spark, out,
         "tbl string, col string, pred string, est_sel double,"
         " exact_sel double, abs_err double",
     )
@@ -932,8 +931,8 @@ def q383_join_order_choice(spark: SparkSession, sf_dir: str) -> DataFrame:
         (name, e, x, name == best) for name, e, x in rows
     ]
     out.sort(key=lambda t: t[0])
-    return _values_df(spark, 
-        out,
+    return local_frame(
+        spark, out,
         "plan string, est_intermediate long, exact_intermediate long,"
         " chosen boolean",
     )
@@ -1032,7 +1031,7 @@ def q384_sampled_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("user_id").alias("d"),
     )
     # ONE bounded collect (a 1-row, 8-int artifact) + driver-side exact
-    # integer math + VALUES publish — the q385 bounded-artifact form.
+    # integer math + local-relation publish — the q385 bounded-artifact form.
     # The former 3-branch union referenced the aggregate join three
     # times, paying repeated broadcast/stage jobs for three rows (r13:
     # 16 jobs → ~6).  _ha6_py is the text twin of the _ha6 expressions
@@ -1049,7 +1048,7 @@ def q384_sampled_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("mean_value", _ha6_py(sx, n_s * 1_000_000), _ha6_py(exs, n * 1_000_000)),
         ("n_rows", float(n_s * 10), float(n)),
     ]
-    return _values_df(spark, out, "stat string, estimate double, exact double")
+    return local_frame(spark, out, "stat string, estimate double, exact double")
 
 
 # ---- catalog-served skew detection (q385) --------------------------------
@@ -1175,8 +1174,8 @@ def q385_join_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 up_u > _SKEW_SHARE_PPM,
             )
         )
-    return _values_df(spark, 
-        out,
+    return local_frame(
+        spark, out,
         "tbl string, col string, n_rows long, max_freq_upper long,"
         " max_freq_exact long, upper_share double, exact_share double,"
         " salt_recommended boolean",
@@ -1297,8 +1296,8 @@ def q386_catalog_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.append(
             (stat, su / 1e6, fu / 1e6, du / 1e6, du > _REANALYZE_PPM)
         )
-    return _values_df(spark, 
-        out,
+    return local_frame(
+        spark, out,
         "stat string, stale double, fresh double, drift_share double,"
         " needs_reanalyze boolean",
     )
@@ -1530,8 +1529,8 @@ def q388_ew_shape_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             (tbl, col, n_s, n_f, tv_u / 1e6, tv_u > _REANALYZE_PPM)
         )
     out.sort(key=lambda t: (t[0], t[1]))
-    return _values_df(spark, 
-        out,
+    return local_frame(
+        spark, out,
         "tbl string, col string, n_stale long, n_fresh long,"
         " tv_share double, needs_reanalyze boolean",
     )
@@ -1671,8 +1670,8 @@ def q389_broadcast_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
         e, x = est[key], exact[key]
         be, bx = e <= _BCAST_ROWS, x <= _BCAST_ROWS
         out.append((*key, e, x, be, bx, be == bx))
-    return _values_df(spark, 
-        out,
+    return local_frame(
+        spark, out,
         "tbl string, col string, est_rows long, exact_rows long,"
         " broadcast_est boolean, broadcast_exact boolean, agree boolean",
     )
@@ -1909,7 +1908,7 @@ def q391_sketch_set_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("union_kmv_est", union_est),
     ]
     out.sort(key=lambda t: t[0])
-    return _values_df(spark, out, "stat string, value double")
+    return local_frame(spark, out, "stat string, value double")
 
 
 # ---- degree-bound join-size audit (q392) -----------------------------------
@@ -2155,8 +2154,8 @@ def q392_join_upper_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             (name, xp, ce, dbe, dbx, _ha6_py(ce, xp), _ha6_py(dbe, xp))
         )
     out.sort(key=lambda t: t[0])
-    return _values_df(spark, 
-        out,
+    return local_frame(
+        spark, out,
         "join_name string, exact_pairs long, cms_est long,"
         " degree_bound_est long, degree_bound_exact long,"
         " cms_ratio double, bound_ratio double",
@@ -2311,8 +2310,8 @@ def q393_groupby_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
             (name, xu / 1e6, yu / 1e6, est_u / 1e6, exact, ratio_u / 1e6)
         )
     out.sort(key=lambda t: t[0])
-    return _values_df(spark, 
-        out,
+    return local_frame(
+        spark, out,
         "group_keys string, ndv_x double, ndv_y double, est_groups double,"
         " exact_groups long, est_ratio double",
     )
@@ -2621,8 +2620,8 @@ def q395_corpus_planning_estimates(
         out.append((stat, est_u, exact_u))
 
     out.sort(key=lambda t: t[0])
-    return _values_df(spark, 
-        [
+    return local_frame(
+        spark, [
             (stat, eu / 1e6, xu / 1e6, abs(eu - xu) / 1e6)
             for stat, eu, xu in out
         ],
@@ -2703,8 +2702,8 @@ def q396_shuffle_partition_advisor(spark: SparkSession, sf_dir: str) -> DataFram
         x = exact_degree_product(spark, sf_dir, a, b)
         out.append((name, e, x, rec(e), rec(x), rec(e) == rec(x)))
     out.sort(key=lambda t: t[0])
-    return _values_df(spark, 
-        out,
+    return local_frame(
+        spark, out,
         "join_name string, est_pairs long, exact_pairs long,"
         " rec_parts_est long, rec_parts_exact long, agree boolean",
     )
@@ -2858,8 +2857,8 @@ def q397_hist_quantile_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
                  abs(est_u - exact_u) / 1e6)
             )
     out.sort(key=lambda t: (t[0], t[1], t[2]))
-    return _values_df(spark, 
-        out,
+    return local_frame(
+        spark, out,
         "tbl string, col string, pct int, est double, exact double,"
         " abs_err double",
     )
@@ -3089,8 +3088,8 @@ def q399_view_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for name in sorted(_VS_VIEWS)
     ]
-    return _values_df(spark, 
-        out, "view string, est_rows double, picked boolean, pick_order int"
+    return local_frame(
+        spark, out, "view string, est_rows double, picked boolean, pick_order int"
     )
 
 
@@ -3344,7 +3343,7 @@ def q408_like_selectivity_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
                 g = p[i : i + 3]
                 b = int(hashlib.md5(g.encode()).hexdigest()[:13], 16)
                 probe_tris.append((p, b))
-    pt = _values_df(spark, probe_tris, "p string, b long")
+    pt = local_frame(spark, probe_tris, "p string, b long")
     est = (
         pt.join(F.broadcast(dfc), "b", "left")
         .groupBy("p")
@@ -3372,6 +3371,6 @@ def q408_like_selectivity_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in sorted(_Q408_PROBES):
         eu, nt = est_map.get(p, (n, 0))
         out.append((p, nt, eu, exacts[p], eu - exacts[p]))
-    return _values_df(spark, 
-        out, "probe string, n_trigrams long, est_ub long, exact long, slack long"
+    return local_frame(
+        spark, out, "probe string, n_trigrams long, est_ub long, exact long, slack long"
     ).orderBy("probe")

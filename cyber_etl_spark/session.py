@@ -68,6 +68,40 @@ def get_spark(app_name: str = "cyber-etl-spark", **extra_conf: str) -> SparkSess
     return builder.getOrCreate()
 
 
+def local_frame(spark: SparkSession, data, schema):
+    """A driver-side table as a Spark frame — the one way driver data
+    enters a plan.
+
+    ``data`` is rows (a sequence of row sequences) or columns (a mapping
+    from column name to a sequence or ndarray); ``schema`` is a
+    StructType or a DDL string and is kept as declared, nullability
+    included.  Each column becomes one ``pa.array`` of the schema's
+    Arrow type, and the Arrow table plans as a ``LocalRelation`` at
+    every size, empty and with array columns included: broadcasting or
+    materializing it is pure JVM.  ``createDataFrame`` of Python rows
+    is an RDD-backed ``LogicalRDD`` whose every consumer pays
+    Python-worker round trips, and rendering values into SQL text
+    re-parses them per plan; neither is used.
+
+    Decimal columns take Python ints or ``Decimal`` values, never an
+    int64 ndarray (Arrow refuses that conversion)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    if isinstance(data, dict):
+        cols = [data[f.name] for f in schema.fields]
+    else:
+        cols = list(zip(*data)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def session_token(spark: SparkSession) -> str:
     """Session-lifetime cache key.
 

@@ -41,6 +41,25 @@ _SCHEMAS: dict[tuple, StructType] = {}
 _NANOS = "spark.sql.legacy.parquet.nanosAsLong"
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """The path :func:`read_table` reads: ``<dir>/<name>.parquet`` when
+    it exists, else the ``<dir>/<name>/`` directory."""
+    flat = os.path.join(sf_dir, f"{name}.parquet")
+    return flat if os.path.exists(flat) else os.path.join(sf_dir, name)
+
+
+def footer_rows(sf_dir: str, name: str) -> "int | None":
+    """The row count of table ``name`` read from its parquet footers on
+    the driver (no Spark job), or None when the path is not readable
+    here (a remote store: Spark resolves it)."""
+    import pyarrow.dataset as ds
+
+    try:
+        return ds.dataset(table_path(sf_dir, name), format="parquet").count_rows()
+    except (OSError, ValueError):
+        return None
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one catalog table. Accepts either ``<dir>/<name>.parquet``
     (driver layout) or a ``<dir>/<name>/`` partitioned directory.
@@ -59,9 +78,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (session.get_spark), so the NTZ→LTZ cast is value-preserving and matches
     DuckDB's naive-timestamp reading of the same file.
     """
-    flat = os.path.join(sf_dir, f"{name}.parquet")
-    nested = os.path.join(sf_dir, name)
-    path = flat if os.path.exists(flat) else nested
+    path = table_path(sf_dir, name)
     try:
         st = os.stat(path)
         key = (spark.sparkContext.applicationId, path, st.st_mtime_ns, st.st_size)

@@ -4,9 +4,10 @@ Times the named queries in ONE warm process at sf0.1 (or $SPARK_GRAFT_SF_DIR)
 with the exact bench methodology (noop sink, job-group job counts), but
 min-of-R with the passes INTERLEAVED round-robin across the query list —
 the r6 lesson: the first-measured variant pays process warm-up, enough to
-flip a sequential "winner".  Shared memoized artifacts are warmed by an
-untimed pass 0 of every query, so reported numbers are marginal
-steady-state costs (the bench's own contract).
+flip a sequential "winner".  Shared memoized artifacts are warmed by a
+pass 0 of every query, so the reported minima are marginal steady-state
+costs (the bench's own contract); pass 0's times are reported apart as
+``cold`` (artifact builds included, in list order).
 
 Usage: python scripts/solo_bench.py q405_single_linkage_sweep q412_luby_mis [...]
        SOLO_REPS=4 python scripts/solo_bench.py ...
@@ -49,11 +50,16 @@ def main() -> None:
     floor_ms = round((time.perf_counter() - t0) / 20 * 1000, 1)
     print(f"job_floor_ms={floor_ms}", flush=True)
 
-    # untimed warm pass: shared artifact builds + codegen
+    # warm pass 0, not in the min: shared artifact builds + codegen; its
+    # time per query is the cold cost, builds included
+    cold: dict[str, float] = {}
     for n in names:
+        t0 = time.perf_counter()
         QUERIES[n].builder(spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
+        cold[n] = round(time.perf_counter() - t0, 3)
+        print(f"  pass0 {n}: {cold[n]:.3f}s", flush=True)
 
     best: dict[str, float] = {}
     jobs: dict[str, int] = {}
@@ -70,7 +76,7 @@ def main() -> None:
             if n not in best or dt < best[n]:
                 best[n], jobs[n] = dt, nj
             print(f"  rep{rep} {n}: {dt:.3f}s jobs={nj}", flush=True)
-    print(json.dumps({"floor_ms": floor_ms, "best": {k: round(v, 3) for k, v in best.items()}, "jobs": jobs}))
+    print(json.dumps({"floor_ms": floor_ms, "cold": cold, "best": {k: round(v, 3) for k, v in best.items()}, "jobs": jobs}))
 
 
 if __name__ == "__main__":

@@ -248,6 +248,21 @@ def test_ivf_index_save_load_roundtrip(spark, tmp_path):
     assert a == b and len(a) == 25
 
 
+def test_ivf_seed_centroids_are_a_local_relation(spark, sf_smoke):
+    """Untrained IVF seeds are collected once and rebuilt as an Arrow
+    local relation: the centroid read and the probe selection consume
+    it without re-scanning the corpus or an RDD-backed frame."""
+    from cyber_etl_spark.operators.ann import ivf_assign
+    from cyber_etl_spark.sources import read_table
+
+    emb = read_table(spark, sf_smoke, "embeddings")
+    cents, assign = ivf_assign(emb, n_cells=8, train_iters=0)
+    plan = cents._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+    assert cents.count() == 8
+    assert assign.select("cell").distinct().count() <= 8
+
+
 def test_scalar_quantize_int8_negative_max_clamps_at_minus_127(spark):
     """A negative max-|x| element whose float divide lands below -127
     must clamp to -127, not floor to -128 (the int8 symmetric contract)."""

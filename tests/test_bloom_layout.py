@@ -123,3 +123,18 @@ def test_zorder_write_empty_frame_roundtrips(spark, tmp_path):
     path = str(tmp_path / "z_empty")
     zorder_write(df, path, "x", "y", num_files=4)
     assert spark.read.parquet(path).count() == 0
+
+
+def test_bloom_prefilter_bitmap_is_a_local_relation(spark):
+    """The broadcast bitmap frame is an Arrow local relation, so the
+    probe plan holds no RDD-backed scan and its broadcast pays no
+    Python round trip."""
+    from cyber_etl_spark.operators.bloom import bloom_build, bloom_prefilter
+
+    small = spark.range(0, 50).select((F.col("id") * 7).alias("k"))
+    big = spark.range(0, 1000).select(F.col("id").alias("k"))
+    words = bloom_build(small, F.col("k"), num_bits=1024, k=4)
+    out = bloom_prefilter(big, "k", words, 1024)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert out.join(small, "k", "left_semi").count() == small.where("k < 1000").count()

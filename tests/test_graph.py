@@ -639,6 +639,28 @@ def test_driver_counts_refused_past_either_bound(spark, sf_smoke, monkeypatch, f
     assert seen[-1] == (100, 101)
 
 
+def test_driver_counts_refused_by_footer_rows(spark, sf_smoke, monkeypatch, fresh_store):
+    """When ``lineitem``'s parquet footers count more rows than the cap,
+    ``co_supply_counts`` refuses with no Spark job and no collect."""
+    from cyber_etl_spark.graph import algorithms, builder
+    from cyber_etl_spark.sources.catalog import footer_rows
+
+    rows = footer_rows(sf_smoke, "lineitem")
+    assert rows == 6000
+    monkeypatch.setattr(algorithms, "_BCAST_MAX_ROWS", rows - 1)
+    calls = []
+    monkeypatch.setattr(type(spark.range(1)), "toArrow", lambda df: calls.append(df))
+    sc = spark.sparkContext
+    group = "footer-refusal"
+    try:
+        sc.setJobGroup(group, group)
+        assert builder.co_supply_counts(spark, sf_smoke) is None
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert calls == []
+
+
 def test_observation_after_eager_pin_returns(spark):
     """An ``Observation`` read after an eager ``localCheckpoint`` holds
     the pin's metrics at once — on a shuffled frame (AQE stage jobs) and

@@ -41,7 +41,8 @@ def test_replay_rejects_unbounded_grid(spark, monkeypatch):
     from cyber_etl_spark.operators.policy import epsilon_greedy_replay
 
     df = spark.createDataFrame(
-        [("d1", 1.0, 2.0), ("d2", 3.0, 0.0)], "day string, a double, b double"
+        [(f"d{i}", 1.0, 2.0) for i in range(5)], "day string, a double, b double"
     )
-    with pytest.raises(Exception, match="bounded-grid"):
+    # the one task sees at most cap + 1 rows, never the whole grid
+    with pytest.raises(Exception, match=r"\b2 rows exceed the bounded-grid"):
         epsilon_greedy_replay(df, ["a", "b"]).collect()

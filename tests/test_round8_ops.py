@@ -133,7 +133,8 @@ def test_textrank_bounded_vocabulary_guard(spark):
     old = tr._MAX_EDGE_ROWS
     tr._MAX_EDGE_ROWS = 100
     try:
-        with pytest.raises(Exception, match="bounded-vocabulary"):
+        # the one task sees at most cap + 1 rows, never the corpus
+        with pytest.raises(Exception, match=r"\b101 edge rows exceed .*bounded-vocabulary"):
             tr.textrank_scores(df).collect()
     finally:
         tr._MAX_EDGE_ROWS = old

@@ -1,9 +1,14 @@
-"""The artifact store — one ``SessionMemo`` behind ``artifact()``: hits
-return the built object, failed builds leave no trace, and eviction on
-write drops stopped sessions and whole surplus datasets."""
+"""The session module.  The artifact store — one ``SessionMemo`` behind
+``artifact()``: hits return the built object, failed builds leave no
+trace, and eviction on write drops stopped sessions and whole surplus
+datasets.  ``local_frame``: driver tables reach Spark as exact local
+relations, and by no other path."""
 
 from __future__ import annotations
 
+import math
+from datetime import date, datetime
+from decimal import Decimal
 from types import SimpleNamespace
 
 import pytest
@@ -124,3 +129,100 @@ def test_builder_cache_purges_foreign_token(spark, sf_smoke):
     assert (session_token(spark), sf_smoke, "edges") in session._ARTIFACTS
     # second call is a pure hit (same object)
     assert builder.co_supply_edges(spark, sf_smoke) is e1
+
+
+# ---- local_frame: the one path from driver data to a Spark frame ----------
+
+_TYPES_DDL = (
+    "k bigint, i int, b boolean, d double, big decimal(38,0),"
+    " dec decimal(18,6), s string, day date, ts timestamp"
+)
+_TYPES_ROWS = [
+    [2**63 - 1, -(2**31), True, float("nan"), 10**30, Decimal("1.234567"),
+     "it's a \\ 'quote'", date(2020, 1, 2), datetime(2020, 1, 2, 3, 4, 5, 678901)],
+    [-(2**63), 2**31 - 1, False, float("inf"), -(10**25), Decimal("-0.000001"),
+     "", date(1970, 1, 1), datetime(1999, 12, 31, 23, 59, 59)],
+    [0, 0, None, float("-inf"), 2**63, None, None, None, None],
+    [None, None, True, -0.0, None, Decimal("3"), "ü", None, None],
+    [1, 1, False, 0.1 + 0.2, 0, Decimal("0"), "x", date(2024, 2, 29),
+     datetime(2024, 2, 29, 0, 0, 0, 1)],
+]
+
+
+def _same(x, y) -> bool:
+    """Exact equality: NaN equals NaN, and -0.0 differs from 0.0."""
+    if isinstance(x, float) and isinstance(y, float):
+        return (math.isnan(x) and math.isnan(y)) or (
+            x == y and math.copysign(1, x) == math.copysign(1, y)
+        )
+    if isinstance(x, Decimal):  # decimal columns also take Python ints
+        return x == y
+    return type(x) is type(y) and x == y
+
+
+@pytest.mark.parametrize("case", ["types", 0, 1, 1000, 1001, 5000, "array"])
+def test_local_frame_is_an_exact_local_relation(spark, case):
+    """Driver rows reach Spark as a ``LocalRelation`` at every size, empty
+    and with an array column included; every type round-trips exactly
+    (NaN, ±inf, −0.0, decimals past int64, quotes and backslashes, dates,
+    µs timestamps, NULL) under the declared schema; and a broadcast
+    consumer runs no Python-backed scan."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    from cyber_etl_spark.session import local_frame
+
+    if case == "types":
+        rows, ddl = _TYPES_ROWS, _TYPES_DDL
+    elif case == "array":
+        rows, ddl = [[i, [i, -i, None]] for i in range(3)], "k bigint, v array<bigint>"
+    else:
+        rows, ddl = [[i, i / 7] for i in range(case)], "k bigint, v double"
+    df = local_frame(spark, rows, ddl)
+    assert df.schema == StructType.fromDDL(ddl)
+    assert df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == "LocalRelation"
+    if case == "types":  # µs timestamps compared in the session time zone
+        df = df.withColumn("ts", F.col("ts").cast("string"))
+        rows = [r[:-1] + [None if r[-1] is None else str(r[-1])] for r in rows]
+    got = [list(r) for r in df.collect()]
+    assert len(got) == len(rows)
+    assert all(_same(x, y) for g, r in zip(got, rows) for x, y in zip(g, r)), got
+    joined = spark.range(5).join(F.broadcast(df), F.col("id") == F.col("k"))
+    joined.write.format("noop").mode("overwrite").save()
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert "Python" not in plan, plan
+
+
+def test_local_frame_takes_columns(spark):
+    """Columns (``{name: ndarray}``) build the same relation as rows."""
+    import numpy as np
+
+    from cyber_etl_spark.session import local_frame
+
+    cols = {"v": np.array([2.5, -1.0]), "k": np.array([7, 8], "int64")}
+    df = local_frame(spark, cols, "k bigint, v double")
+    assert [tuple(r) for r in df.collect()] == [(7, 2.5), (8, -1.0)]
+
+
+def test_one_path_from_driver_data():
+    """``createDataFrame(`` appears in the engine only inside
+    ``local_frame``: every driver table takes the one Arrow path, so no
+    RDD-backed frame or SQL-text table can regrow beside it."""
+    import inspect
+    import pathlib
+
+    import cyber_etl_spark
+
+    pkg = pathlib.Path(cyber_etl_spark.__file__).parent
+    hits = [
+        f"{p.relative_to(pkg)}:{n}"
+        for p in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if "createDataFrame(" in line
+    ]
+    src, start = inspect.getsourcelines(session.local_frame)
+    allowed = {
+        f"session.py:{start + i}" for i, line in enumerate(src) if "createDataFrame(" in line
+    }
+    assert hits and set(hits) <= allowed, hits
